@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot, l2_norm
+from ..session import release_checkpoint
 
 
 def ivf_centroids(
@@ -240,6 +241,7 @@ def ivf_recall_sweep(
     )
     n_exact = exact.count()
     if n_exact == 0:
+        release_checkpoint(exact)
         return [(int(n), 1.0) for n in nprobes]
 
     @F.pandas_udf("array<int>")
@@ -305,4 +307,6 @@ def ivf_recall_sweep(
         .agg(F.count(F.lit(1)).alias("h"))
         .collect()
     }
+    release_checkpoint(exact)
+    release_checkpoint(scored)
     return [(int(n), hits.get(n, 0) / n_exact) for n in nprobes]

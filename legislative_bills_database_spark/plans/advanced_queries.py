@@ -1509,9 +1509,10 @@ def q_bootstrap_ci(spark, sf_dir):
     # replicate < 2^53 µ-units) now fails LOUDLY instead of silently
     # diverging from the decimal-exact oracle past ~sf 30 — assert_true
     # over the B≈50 replicate sums costs nothing; the guarded value is
-    # the identical expression (same casts, same division order).
+    # the identical expression (same casts, same division order). The
+    # bound is on |Σ|, so a wrapped (negative) long sum trips it too.
     guard = F.assert_true(
-        F.col("s_micro") < F.lit(1 << 53),
+        F.abs(F.col("s_micro")) < F.lit(1 << 53),
         F.lit(
             "q_bootstrap_ci: per-replicate micro-unit sum reached 2^53;"
             " the long fast path is no longer bit-identical to the"

@@ -626,6 +626,21 @@ def test_bootstrap_ci_brackets_the_mean(spark):
     assert row.ci_lo < true_mean < row.ci_hi
 
 
+def test_bootstrap_ci_guard_trips_on_negative_sum(spark, tmp_path):
+    """The 2^53 exactness guard bounds |Σ|: a replicate sum far below
+    −2^53 µ-units must fail loudly, not pass as "small"."""
+    from legislative_bills_database_spark.plans.advanced_queries import (
+        q_bootstrap_ci,
+    )
+
+    spark.createDataFrame(
+        [(k, 1, -1.0e10) for k in range(1, 9)],
+        "l_orderkey long, l_linenumber int, l_quantity double",
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    with pytest.raises(Exception, match="2\\^53"):
+        q_bootstrap_ci(spark, str(tmp_path)).collect()
+
+
 # ---------------------------------------------------------------------------
 # Holt linear trend (chunked matrix-affine scan)
 # ---------------------------------------------------------------------------

@@ -77,3 +77,26 @@ def test_ivf_recall_sweep_matches_per_point(spark):
         assert r == solo, (n, r, solo)
     vals = [r for _, r in swept]
     assert vals == sorted(vals)  # monotone in nprobe
+
+
+def test_ivf_recall_sweep_parity_tiny(spark):
+    """Fast-lane pin of the same sweep == per-point equality on a tiny
+    input (the full-fixture pin above runs in the slow lane); the sweep
+    releases both of its eager checkpoints."""
+    from legislative_bills_database_spark.operators.ivf import (
+        ivf_recall_sweep,
+    )
+
+    emb = _emb(spark).filter(F.col("vec_id") < 120)
+    cents = ivf_centroids(emb, "embedding", k=4)
+    queries = emb.filter(F.col("vec_id") < 6)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    swept = ivf_recall_sweep(
+        emb, queries, "vec_id", "embedding", cents, nprobes=[1, 3], k=3
+    )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert [n for n, _ in swept] == [1, 3]
+    for n, r in swept:
+        assert r == ivf_recall(
+            emb, queries, "vec_id", "embedding", cents, nprobe=n, k=3
+        ), n
