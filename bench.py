@@ -755,7 +755,11 @@ def main() -> None:
     # Any query whose RAW vs_prev exceeds 1.5× now gets ONE automatic
     # same-session min-of-3 re-measure at the end of the sweep (the
     # machine has usually calmed by then), recorded under "remeasure" in
-    # BENCH_FULL.json so the artifact carries its own rebuttal. ADDITION
+    # BENCH_FULL.json. It is NOT a fresh-session run: the session-lifetime
+    # memos (_purchase_sym, the co-purchase edge frame, IVF centroids)
+    # are already filled by then, so "rm" values read faster than a cold
+    # run and cannot by themselves clear a regression; confirm a flagged
+    # cell with scripts/solo_measure.py (a fresh session). ADDITION
     # ONLY: the primary `queries` timings and their methodology are
     # untouched; re-measures are capped at 12 to bound sweep wall.
     remeasure: dict[str, float] = {}
@@ -816,7 +820,11 @@ def main() -> None:
             "transients are visible). Both ends of a cross-round "
             "comparison run under uncontrolled co-tenant load - confirm "
             "any flagged cell with a solo min-of-3 re-measure before "
-            "treating it as a regression."
+            "treating it as a regression. The remeasure values (rm) rerun "
+            "flagged queries at the end of the sweep in the same session, "
+            "with its session memos already filled, so they read faster "
+            "than a fresh-session run: confirm a flagged cell with "
+            "scripts/solo_measure.py, not with rm alone."
         ),
     }
     here = os.path.dirname(os.path.abspath(__file__))

@@ -25,6 +25,25 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   flag, so a caller overrides any of them through ``extraJavaOptions``
   (e.g. in ``PYSPARK_SUBMIT_ARGS``). It applies only when this factory
   launches the JVM: a session built elsewhere keeps its own flags.
+- One preloaded Python worker pool. Python workers fork from this
+  package's daemon (``spark.python.daemon.module``, see
+  ``worker_daemon``), which imports pandas, pyarrow and the Arrow
+  serializers before forking and keeps each zip archive's directory
+  across tasks while the archive is unchanged; with Spark's default
+  daemon, those imports and a re-read of ``pyspark.zip``'s directory on
+  every task were most of the Python workers' CPU in the ingest pass.
+  ``simplifiedTraceback`` is off: Spark sets ``SPARK_SIMPLIFIED_TRACEBACK``
+  in the environment of some Python UDF kinds and not others, and each
+  distinct environment gets a daemon and worker pool of its own, so
+  with it on the PDF ``mapInPandas`` and the HTML ``pandas_udf`` ran in
+  two pools. The trade: a UDF error shows its full traceback, pyspark
+  frames included. The workers find the daemon through the package's
+  parent directory, which goes in front of any value already set for the
+  executors' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, which
+  pyspark keeps in ``SparkContext.environment``); without it a session
+  started from a directory outside the repository fails every Python
+  UDF. The daemon is a static conf, so like the JIT profile
+  it applies only when this factory creates the context.
 """
 
 from __future__ import annotations
@@ -33,6 +52,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package: the executors' PYTHONPATH entry
+# for the worker daemon (see the module docstring)
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # C2 thresholds at 10x the JDK 17 defaults (see the module docstring)
 JIT_PROFILE = (
     "-XX:Tier4InvocationThreshold=50000"
@@ -78,8 +100,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.defaultJavaOptions", JIT_PROFILE)
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "legislative_bills_database_spark.worker_daemon")
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "").split(os.pathsep)
+    if PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(p for p in [PACKAGE_PARENT, *paths] if p)
+    return spark
 
 
 def release_checkpoint(df) -> None:

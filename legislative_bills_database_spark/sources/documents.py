@@ -12,6 +12,11 @@ from ``input_file_name()`` and the document key from the file name, which
 is exactly the reference's ``list.files`` + ``gsub('.json','',...)``
 catalog scan re-expressed so Catalyst sees it as ordinary columns.
 
+Reads are rooted at the session directories, not at the files, and keep
+their ``*.json`` files with ``pathGlobFilter`` (see :func:`_read_json`):
+other files beside the documents are skipped, and listing costs one
+directory listing per session, not a Spark job with a task per file.
+
 Scale note: millions of tiny JSON files are an HDFS/S3 anti-pattern;
 :func:`legislative_bills_database_spark.sources.cache.memo_parquet` is the
 staging path — read the tree once, persist parquet, query the staging
@@ -107,12 +112,38 @@ def session_dir(data_root: str, title: str, kind: str) -> str:
     return f"{data_root}/{title}/CA/{title.replace(' ', '_')}/{kind}"
 
 
-def _with_catalog_columns(df: DataFrame) -> DataFrame:
-    """Recover (session, doc_key) from the file path — the reference's
-    list.files catalog (legiscan_search_all_bills.R:74-75) as columns.
+def _read_json(
+    spark: SparkSession,
+    schema: StructType,
+    data_root: str,
+    sessions: list[str] | None,
+    kind: str,
+) -> DataFrame:
+    """The ``*.json`` files of the ``kind`` directories of ``sessions``
+    (every session when None), with (session, doc_key) recovered from the
+    file path — the reference's list.files catalog
+    (legiscan_search_all_bills.R:74-75) as columns.
+
+    The read is rooted at the session directories and keeps the JSON
+    files with ``pathGlobFilter``: Spark lists each root directory, and
+    lists them in parallel only past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    roots. A glob down to the files would hand Spark one root path per
+    file, and past 32 files every read would launch a listing job with
+    one task per file.
 
     input_file_name() yields URL-encoded URIs ('%20' for the spaces in
     session titles) — decode before extracting."""
+    if sessions is None:
+        roots = [f"{data_root}/*/CA/*/{kind}"]
+    else:
+        roots = [session_dir(data_root, s, kind) for s in sessions]
+    df = (
+        spark.read.schema(schema)
+        .option("multiLine", True)
+        .option("pathGlobFilter", "*.json")
+        .json(roots)
+    )
     path = F.url_decode(F.input_file_name())
     return df.withColumn(
         "session", F.regexp_extract(path, r"/([^/]+)/CA/", 1)
@@ -132,12 +163,7 @@ def read_bills(
     partition pruning by path, the engine twin of the reference reading
     only configured sessions (legiscan_search_all_bills.R:48,71-73).
     """
-    if sessions is None:
-        paths = [f"{data_root}/*/CA/*/bill/*.json"]
-    else:
-        paths = [f"{session_dir(data_root, s, 'bill')}/*.json" for s in sessions]
-    raw = spark.read.schema(BILL_SCHEMA).option("multiLine", True).json(paths)
-    return _with_catalog_columns(raw).select(
+    return _read_json(spark, BILL_SCHEMA, data_root, sessions, "bill").select(
         "session",
         "doc_key",
         F.col("bill.bill_number").alias("bill_number"),
@@ -184,12 +210,7 @@ def read_people(
 ) -> DataFrame:
     """Flat person table from the JSON document tree
     (legislator_bill_counts_run.R:72-87)."""
-    if sessions is None:
-        paths = [f"{data_root}/*/CA/*/people/*.json"]
-    else:
-        paths = [f"{session_dir(data_root, s, 'people')}/*.json" for s in sessions]
-    raw = spark.read.schema(PERSON_SCHEMA).option("multiLine", True).json(paths)
-    return _with_catalog_columns(raw).select(
+    return _read_json(spark, PERSON_SCHEMA, data_root, sessions, "people").select(
         "session",
         "doc_key",
         F.col("person.people_id").alias("people_id"),

@@ -118,6 +118,9 @@ def data_root(tmp_path_factory) -> str:
         [(22, "Introduced", "http://x/ab128"), (23, "Chaptered", "http://x/ab128c")],
         title="Budget Act of 2021", desc="state budget", session_name=S21,
         date="2021-06-28"))
+    # not a document: the readers keep only *.json
+    for kind in ("bill", "people"):
+        (Path(session_dir(str(root), S23, kind)) / "notes.txt").write_text("not json\n")
     return str(root)
 
 
@@ -129,6 +132,37 @@ def test_read_bills_catalog_columns(spark, data_root):
     assert [t["type"] for t in row["texts"]] == ["Introduced", "Chaptered"]
     # partition pruning by session list
     assert read_bills(spark, data_root, [S23]).count() == 5
+    # every session (the directory glob) is exactly the per-session reads
+    for read in (read_bills, read_people):
+        per_session = [read(spark, data_root, [s]).collect() for s in SESSIONS]
+        assert sorted(read(spark, data_root).collect()) == sorted(sum(per_session, []))
+    assert sorted(r["doc_key"] for r in read_people(spark, data_root).collect()) == [
+        "101", "101", "102", "103", "16285"
+    ]
+
+
+def test_read_bills_lists_session_directory_on_driver(spark, tmp_path):
+    """40 bill files in one session: past Spark's 32-path parallel
+    listing threshold if the read were rooted at the files, which would
+    launch a listing job with a task per file."""
+    n = 40
+    for i in range(n):
+        _write(tmp_path, S23, "bill", f"AB{i}", _bill(f"AB{i}", "B", 4, [], []))
+    (Path(session_dir(str(tmp_path), S23, "bill")) / "notes.txt").write_text("x\n")
+    sc = spark.sparkContext
+    group = "read-40-bills"
+    sc.setJobGroup(group, "directory-rooted bill read")
+    try:
+        assert read_bills(spark, str(tmp_path), [S23]).count() == n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    tasks = sum(tracker.getStageInfo(s).numTasks for s in stages)
+    assert 0 < tasks < n
 
 
 def test_legislator_bill_counts_end_to_end(spark, data_root):
