@@ -5,9 +5,10 @@ PY ?= python
 # full local test suite (includes tests/test_oracle_parity.py, which
 # sweeps ALL declared queries vs their DuckDB oracles at sf0.001 — the
 # deferred-past-the-driver-window queries are value-checked here on
-# every run, so they cannot regress silently)
+# every run, so they cannot regress silently). pytest.ini deselects the
+# slow lane by default; -m "slow or not slow" runs both lanes.
 test:
-	$(PY) -m pytest tests/ -x -q
+	$(PY) -m pytest tests/ -x -q -m "slow or not slow"
 
 # driver-style sweep of every declared query at sf0.001 + sf0.01
 # (exit != 0 on any oracle mismatch) — run before ending a round
@@ -38,7 +39,7 @@ leakgrep:
 # shipped a crashing query because only phase commits were gated. Run
 # this before ANY end-of-round snapshot; paste its tail into ROUND_NOTES.
 round-gate: leakgrep
-	$(PY) -m pytest tests/ -q
+	$(PY) -m pytest tests/ -q -m "slow or not slow"
 	$(PY) scripts/preflight.py /root/testdata/sf0.001
 	$(PY) scripts/preflight.py /root/testdata/sf0.01
 	@echo "ROUND GATE: ALL GREEN"

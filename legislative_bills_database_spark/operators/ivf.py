@@ -87,24 +87,6 @@ def lloyd_kmeans(
     return cents
 
 
-_CENTROID_CACHE: dict[tuple, np.ndarray] = {}
-
-
-def ivf_centroids_cached(
-    df: DataFrame, vec_col: str, cache_key: tuple, **kwargs
-) -> np.ndarray:
-    """Memoized :func:`ivf_centroids` — the fit is deterministic for a
-    given (input, params) because of the fixed seed, so repeated
-    invocations over the same source (e.g. every bench/driver call of
-    q_ann_ivf_topk on one sf_dir) reuse the index instead of re-running
-    KMeans. ``cache_key`` must identify the INPUT (e.g. (sf_dir, slice
-    tag)); params are keyed automatically."""
-    key = (cache_key, vec_col, tuple(sorted(kwargs.items())))
-    if key not in _CENTROID_CACHE:
-        _CENTROID_CACHE[key] = ivf_centroids(df, vec_col, **kwargs)
-    return _CENTROID_CACHE[key]
-
-
 def ivf_assignments(
     df: DataFrame,
     id_col: str,

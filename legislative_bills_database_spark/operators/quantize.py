@@ -71,21 +71,6 @@ def pq_codebooks(
     )
 
 
-_CODEBOOK_CACHE: dict[tuple, np.ndarray] = {}
-
-
-def pq_codebooks_cached(
-    df: DataFrame, vec_col: str, cache_key: tuple, **kwargs
-) -> np.ndarray:
-    """Memoized :func:`pq_codebooks` — same rationale as
-    ivf.ivf_centroids_cached: the fit is seed-deterministic, so repeated
-    invocations over one source reuse the codebooks."""
-    key = (cache_key, vec_col, tuple(sorted(kwargs.items())))
-    if key not in _CODEBOOK_CACHE:
-        _CODEBOOK_CACHE[key] = pq_codebooks(df, vec_col, **kwargs)
-    return _CODEBOOK_CACHE[key]
-
-
 def pq_encode(
     df: DataFrame, id_col: str, vec_col: str, codebooks: np.ndarray
 ) -> DataFrame:

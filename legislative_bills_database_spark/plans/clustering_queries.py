@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..session import memo
 from .registry import query
 
 _KM_K = 4
@@ -124,19 +125,16 @@ def _km_assign(ex, cent_df):
     )
 
 
-#: memoized final fit per (sf_dir, k, rounds): bounded k·d driver rows
-#: for c_{R-1} AND c_R (the ivf_centroids_cached precedent). c_{R-1}
-#: reproduces the final assignment a_R (the one that PRODUCED c_R) —
-#: assigning against c_R instead would be sweep R+1 and diverge from
-#: the oracle's a{R}.
-_KM_CACHE: dict = {}
-
-
 def _km_fit(spark, sf_dir):
-    """Run the Lloyd's sweeps once; return (c_prev_rows, c_last_rows)."""
-    key = (sf_dir, _KM_K, _KM_ROUNDS)
-    if key in _KM_CACHE:
-        return _KM_CACHE[key]
+    """Run the Lloyd's sweeps once per session; return (c_prev_rows,
+    c_last_rows) — bounded k·d driver rows. c_{R-1} reproduces the final
+    assignment a_R (the one that PRODUCED c_R) — assigning against c_R
+    instead would be sweep R+1 and diverge from the oracle's a{R}."""
+    return memo(spark, sf_dir, ("km_fit", _KM_K, _KM_ROUNDS),
+                lambda: _km_sweeps(spark, sf_dir))
+
+
+def _km_sweeps(spark, sf_dir):
     ex = _km_explode(spark, sf_dir).localCheckpoint(eager=True)
     seeds = [
         r["vec_id"]
@@ -170,12 +168,10 @@ def _km_fit(spark, sf_dir):
             )
             .localCheckpoint(eager=True)  # pin the sweep; flat lineage
         )
-    out = (
+    return (
         [(r["cid"], r["dim"], r["c"]) for r in prev.collect()],
         [(r["cid"], r["dim"], r["c"]) for r in cent.collect()],
     )
-    _KM_CACHE[key] = out
-    return out
 
 
 _KM_SCHEMA = "cid int, dim int, c long"
@@ -194,7 +190,7 @@ def q_kmeans_exact(spark, sf_dir):
     aggregations — the standard distributed Lloyd's; the k·d centroid
     collect between sweeps is bounded state (the ivf.py precedent),
     never data-sized. Empty clusters simply drop their rows (both
-    engines agree by construction). The fit is memoized per sf_dir
+    engines agree by construction). The fit is session-memoized
     (_km_fit) so the silhouette/scatter companions certify the SAME
     sweeps without re-running them."""
     prev_rows, last_rows = _km_fit(spark, sf_dir)

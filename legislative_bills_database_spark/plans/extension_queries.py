@@ -29,6 +29,7 @@ from ..operators.packing import first_fit_pack, pack_chunks, pack_stats
 from ..operators.ranking import bm25_topk, sql_bm25_topk
 from ..operators.sessionize import sessionize
 from ..operators.similarity import cosine_topk, lsh_bucketed_pairs
+from ..session import memo
 from ..sources.multimodal import fake_image_features
 from .registry import query
 
@@ -177,10 +178,11 @@ def q_ann_ivf_topk(spark, sf_dir):
     cosine inside probed lists only (operators/ivf.py — the second ANN
     scale path beside hyperplane LSH). Centroids are memoized per
     (sf_dir, params) — the index is fit once, not per query invocation."""
-    from ..operators.ivf import ivf_centroids_cached, ivf_topk
+    from ..operators.ivf import ivf_centroids, ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = ivf_centroids_cached(emb, "embedding", (sf_dir, "full"), k=16)
+    centroids = memo(spark, sf_dir, ("ivf_centroids", "full", 16),
+                     lambda: ivf_centroids(emb, "embedding", k=16))
     queries = emb.filter(F.col("vec_id") < 10)
     return ivf_topk(emb, queries, "vec_id", "embedding", centroids, nprobe=2, k=5)
 
@@ -194,10 +196,11 @@ def q_pq_topk(spark, sf_dir):
     sample-fit driver-side and memoized per sf_dir; deterministic given
     the seed. Recall vs exact cosine is asserted in
     tests/test_quantize.py and surfaced in q_pq_recall."""
-    from ..operators.quantize import pq_adc_topk, pq_codebooks_cached, pq_encode
+    from ..operators.quantize import pq_adc_topk, pq_codebooks, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_codebooks_cached(emb, "embedding", (sf_dir, "full"), m=16, k=128)
+    books = memo(spark, sf_dir, ("pq_codebooks", "full", 16, 128),
+                 lambda: pq_codebooks(emb, "embedding", m=16, k=128))
     codes = pq_encode(emb, "vec_id", "embedding", books)
     queries_df = emb.filter(F.col("vec_id") < 10)
     return pq_adc_topk(codes, queries_df, "vec_id", "embedding", books, k=5)
@@ -208,10 +211,11 @@ def q_pq_recall(spark, sf_dir):
     """PQ quality, driver-visible (same contract as q_ann_recall): one
     row (method, n_exact, n_recovered, recall) comparing ADC top-5 over
     8-byte codes against exact cosine top-5 for 10 queries."""
-    from ..operators.quantize import pq_adc_topk, pq_codebooks_cached, pq_encode
+    from ..operators.quantize import pq_adc_topk, pq_codebooks, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    books = pq_codebooks_cached(emb, "embedding", (sf_dir, "lt500"), m=16, k=128)
+    books = memo(spark, sf_dir, ("pq_codebooks", "lt500", 16, 128),
+                 lambda: pq_codebooks(emb, "embedding", m=16, k=128))
     codes = pq_encode(emb, "vec_id", "embedding", books)
     queries_df = emb.filter(F.col("vec_id") < 10)
     exact_topk = cosine_topk(emb, queries_df, "vec_id", "embedding", k=5)
@@ -231,11 +235,12 @@ def q_semdedup(spark, sf_dir):
     (vec_id, cluster, witness) — deterministic for the fixed seed;
     keep-set = anti-join, verified against per-cluster brute force in
     tests/test_semdedup.py."""
-    from ..operators.ivf import ivf_centroids_cached
+    from ..operators.ivf import ivf_centroids
     from ..operators.semdedup import semdedup_drops
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = ivf_centroids_cached(emb, "embedding", (sf_dir, "full"), k=16)
+    centroids = memo(spark, sf_dir, ("ivf_centroids", "full", 16),
+                     lambda: ivf_centroids(emb, "embedding", k=16))
     return semdedup_drops(
         emb, "vec_id", "embedding", centroids, threshold=0.35, cluster_cap=20_000
     )
@@ -270,7 +275,7 @@ def q_ann_recall(spark, sf_dir):
     up as a changed value here instead of only in pytest
     (operators/similarity.py:lsh_recall, operators/ivf.py:ivf_recall are
     the float twins asserted ≥0.9 in tests)."""
-    from ..operators.ivf import ivf_centroids_cached, ivf_topk
+    from ..operators.ivf import ivf_centroids, ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     # the fixture's planted near-dup pairs live at cos ≈ 0.4; hyperplane
@@ -287,7 +292,8 @@ def q_ann_recall(spark, sf_dir):
 
     queries_df = emb.filter(F.col("vec_id") < 10)
     exact_topk = cosine_topk(emb, queries_df, "vec_id", "embedding", k=5)
-    centroids = ivf_centroids_cached(emb, "embedding", (sf_dir, "lt500"), k=8)
+    centroids = memo(spark, sf_dir, ("ivf_centroids", "lt500", 8),
+                     lambda: ivf_centroids(emb, "embedding", k=8))
     approx_topk = ivf_topk(
         emb, queries_df, "vec_id", "embedding", centroids, nprobe=4, k=5
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import exact_sum, sql_exact_sum
 from ..io import load_table, load_tables
+from ..session import memo
 from .registry import query
 
 
@@ -197,9 +198,6 @@ _COPURCHASE_EDGES = """
 """
 
 
-_COPURCHASE_CACHE: dict = {}
-
-
 def _copurchase_edges(spark, sf_dir):
     """(src, dst, w) canonical a<b co-purchase edges over the %97 order
     sample: parts bought together in one sampled order, weight = min
@@ -208,35 +206,31 @@ def _copurchase_edges(spark, sf_dir):
     sample bounds the clique fan-out the way any real co-occurrence
     pipeline bounds baskets.
 
-    r15: memoized per (applicationId, sf_dir) as an EAGER checkpoint —
-    the _cs_edges discipline: ~19 call sites across the graph-query
-    family (SSSP, CC, label prop, PPR, MIS, Borůvka, critical path,
-    random walk, Markov …) each re-ran the lineitem self-join +
-    aggregate per invocation, and several reference the frame from
-    multiple union legs in one action (the r14 multi-consumer rule
-    wants eager). The edge frame is %97-sample-bounded (≈6 k rows at
-    sf0.1) — one materialization per dataset per session."""
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    cached = _COPURCHASE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 97 == 0
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("src"),
-                  F.col("l_quantity").alias("qa"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("dst"),
-                  F.col("l_quantity").alias("qb"))
-    df = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(
-            F.min((F.col("qa") + F.col("qb")).cast("long")).alias("w")
+    Session-memoized as an EAGER checkpoint: ~19 call sites across the
+    graph-query family (SSSP, CC, label prop, PPR, MIS, Borůvka,
+    critical path, random walk, Markov …) share it, and several
+    reference the frame from multiple union legs in one action (the r14
+    multi-consumer rule wants eager). The edge frame is
+    %97-sample-bounded (≈6 k rows at sf0.1)."""
+
+    def build():
+        li = load_table(spark, sf_dir, "lineitem").filter(
+            F.col("l_orderkey") % 97 == 0
         )
-    ).localCheckpoint(eager=True)
-    _COPURCHASE_CACHE[key] = df
-    return df
+        a = li.select("l_orderkey", F.col("l_partkey").alias("src"),
+                      F.col("l_quantity").alias("qa"))
+        b = li.select("l_orderkey", F.col("l_partkey").alias("dst"),
+                      F.col("l_quantity").alias("qb"))
+        return (
+            a.join(b, "l_orderkey")
+            .filter(F.col("src") < F.col("dst"))
+            .groupBy("src", "dst")
+            .agg(
+                F.min((F.col("qa") + F.col("qb")).cast("long")).alias("w")
+            )
+        ).localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, "copurchase_edges", build)
 
 
 @query(

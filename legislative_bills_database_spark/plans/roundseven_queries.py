@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_tables
 from ..operators.basket import cooccurrence_pairs, degree_capped_edges
+from ..session import memo
 from .registry import query
 
 # cap floor: tiny fixtures never cap below the r6 measured operating
@@ -141,37 +142,31 @@ def _sql_cf(tag: str) -> str:
     )"""
 
 
-_CS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _cs_edges(spark, sf_dir) -> DataFrame:
     """Slim DISTINCT (cust, supp) bipartite edge list; checkpointed —
     deg + both self-join sides reference it (uncheckpointed the
     orders⋈lineitem + distinct would execute three times).
 
-    Memoized per (applicationId, sf_dir): bench/preflight sweeps invoke
-    the four phase-40 queries back-to-back in one session, and an
-    unmemoized localCheckpoint per call would accumulate orphaned
-    checkpoint blocks for the session's lifetime (ADVICE r7). One
-    shared frame per dataset bounds that to a single materialization —
-    and lets the exact/approx chains of the recall certificates reuse
-    the same scan.
+    Session-memoized: bench/preflight sweeps invoke the four phase-40
+    queries back-to-back in one session, and an unmemoized
+    localCheckpoint per call would accumulate orphaned checkpoint
+    blocks for the session's lifetime (ADVICE r7). One shared frame per
+    dataset bounds that to a single materialization — and lets the
+    exact/approx chains of the recall certificates reuse the same scan.
     """
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    cached = _CS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    orders, lineitem = load_tables(spark, sf_dir, "orders", "lineitem")
-    df = (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_suppkey").alias("supp"),
+
+    def build():
+        orders, lineitem = load_tables(spark, sf_dir, "orders", "lineitem")
+        return (
+            orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+            .select(
+                F.col("o_custkey").alias("cust"),
+                F.col("l_suppkey").alias("supp"),
+            )
+            .distinct()
         )
-        .distinct()
-    ).localCheckpoint(eager=False)
-    _CS_CACHE[key] = df
-    return df
+
+    return _memo_sim(spark, sf_dir, "cs_edges", build)
 
 
 def _adaptive_cap(cs: DataFrame) -> int:
@@ -208,37 +203,15 @@ def _capped_edges(cs: DataFrame) -> DataFrame:
     return degree_capped_edges(cs, "cust", "supp", _adaptive_cap(cs))
 
 
-_SIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_sim_caches() -> None:
-    """Drop every similarity-chain memo (edge lists + derived top-k
-    frames, including roundten's weighted-jaccard tags). Any caller
-    timing PER-PLAN cost or regenerating data under an sf_dir within
-    one Spark app must call this between runs (ADVICE r9: the caches
-    are keyed only by (applicationId, sf_dir, tag) and never
-    self-invalidate); bench_sf1.py / bench_skew.py route through here
-    instead of reaching into private module state."""
-    _CS_CACHE.clear()
-    _SIM_CACHE.clear()
-
-
 def _memo_sim(spark, sf_dir, tag: str, build) -> DataFrame:
-    """Memoize a similarity-chain frame per (applicationId, sf_dir) —
-    the `_cs_edges` discipline extended to the derived tables the four
-    CF/jaccard certificate queries share (ADVICE r8: the exact top-100
-    similarity table was rebuilt in q_graph_jaccard_recall,
-    q_item_cf_recall AND the approx chain re-derived the capped edges
-    twice — ~15-20 s of every bench/preflight sweep). The frames are
-    lazily checkpointed: the capped edge list is cap-bounded, the
-    top-100 tables are 100 rows, so executor storage stays trivial."""
-    key = (spark.sparkContext.applicationId, str(sf_dir), tag)
-    cached = _SIM_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = build().localCheckpoint(eager=False)
-    _SIM_CACHE[key] = df
-    return df
+    """Session-memoize a similarity-chain frame that the CF/jaccard
+    certificate queries share (ADVICE r8: the exact top-100 similarity
+    table was rebuilt in q_graph_jaccard_recall, q_item_cf_recall AND
+    the approx chain re-derived the capped edges twice — ~15-20 s of
+    every bench/preflight sweep). The frames are lazily checkpointed:
+    the capped edge list is cap-bounded, the top-100 tables are 100
+    rows, so executor storage stays trivial."""
+    return memo(spark, sf_dir, tag, lambda: build().localCheckpoint(eager=False))
 
 
 def _capped_cs(spark, sf_dir) -> DataFrame:

@@ -1141,11 +1141,8 @@ def _rec_base_frames(spark, sf_dir):
 def _rec_eval_frames(spark, sf_dir):
     """(hits, nrel): per-user ranked hit flags and relevant counts for
     the temporal-split recommender evaluation. ADVICE r10 #3: both
-    frames are memoized through ``_memo_sim`` per (applicationId,
-    sf_dir) — q_map_at_k and q_mrr now genuinely SHARE one
-    materialization per sweep (the jaccard/edit-distance chain
-    discipline), instead of merely sharing the frame definition as the
-    old docstring claimed."""
+    frames go through ``_memo_sim``, so q_map_at_k and q_mrr SHARE one
+    materialization per sweep."""
 
     def build_nrel():
         rec, te = _rec_base_frames(spark, sf_dir)
@@ -1265,8 +1262,7 @@ def q_mrr(spark, sf_dir):
     'how high does the first correct suggestion sit'. Per user the
     reciprocal of the first hit rank (0 when the top-k misses
     entirely), 9dp-rounded into decimals and exactly summed; one final
-    division. Shares q_map_at_k's ranked-hits frame through the
-    _memo_sim cache (one materialization per sweep)."""
+    division. Shares q_map_at_k's ranked-hits frame."""
     hits, _ = _rec_eval_frames(spark, sf_dir)
     fr = hits.groupBy("cust").agg(
         F.min(F.when(F.col("hit") == 1, F.col("rk"))).alias("frk")

@@ -44,13 +44,37 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   started from a directory outside the repository fails every Python
   UDF. The daemon is a static conf, so like the JIT profile
   it applies only when this factory creates the context.
+
+Session memo (``memo``): the one in-memory store for frames and fits
+that several queries share (co-purchase edges, graph layouts, k-means
+and IVF centroids, PQ codebooks, similarity chains).
+
+- Keying: ``(sf_dir, key)``, where ``key`` names the frame and its
+  parameters, e.g. ``("ivf_centroids", "lt500", 16)``.
+- Fingerprint: each entry keeps the ``(path, st_size, st_mtime_ns)`` of
+  every file under ``sf_dir`` at build time. A call that sees another
+  fingerprint rebuilds the entry, so rewriting an input table never
+  serves a stale frame. When the driver cannot stat ``sf_dir`` (e.g. a
+  remote URI) the fingerprint is empty and the entry lives as long as
+  the application.
+- Lifetime: entries belong to one ``applicationId``. A call from
+  another application drops every entry first, without calling into
+  the stopped context; the store's bound is one application times one
+  entry per key.
+- Release: a replaced DataFrame has its checkpoint blocks released and
+  is unpersisted. ``clear_memos`` drops everything, releasing the
+  DataFrames while their application is still the active one.
+- Materialisation stays with each caller's ``build``: the memo stores
+  whatever ``build()`` returns.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 # the directory holding this package: the executors' PYTHONPATH entry
 # for the worker daemon (see the module docstring)
@@ -130,6 +154,71 @@ def release_checkpoint(df) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass
+
+
+# the session memo (see the module docstring): the application that owns
+# the entries, and (sf_dir, key) -> (fingerprint, value)
+_memo_app: str | None = None
+_memos: dict[tuple, tuple] = {}
+_memo_lock = threading.Lock()
+
+
+def _fingerprint(sf_dir) -> tuple:
+    """Sorted (path, st_size, st_mtime_ns) of every file under sf_dir;
+    empty when the driver cannot list it."""
+    out = []
+    for root, dirs, files in os.walk(str(sf_dir)):
+        dirs.sort()
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            try:
+                st = os.stat(path)
+            except OSError:
+                continue
+            out.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _release(value) -> None:
+    if isinstance(value, DataFrame):
+        release_checkpoint(value)
+        value.unpersist()
+
+
+def memo(spark, sf_dir, key, build):
+    """``build()``'s result, memoized per (sf_dir, key) for the current
+    application and rebuilt when the files under sf_dir change."""
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    slot = (str(sf_dir), key)
+    fp = _fingerprint(sf_dir)
+    # the lock guards the store, not build(): builds nest memo calls
+    with _memo_lock:
+        if app != _memo_app:
+            _memos.clear()  # the old application is gone: no JVM calls
+            _memo_app = app
+        hit = _memos.get(slot)
+        if hit is not None and hit[0] == fp:
+            return hit[1]
+        stale = _memos.pop(slot, None)
+    if stale is not None:
+        _release(stale[1])
+    value = build()
+    with _memo_lock:
+        _memos[slot] = (fp, value)
+    return value
+
+
+def clear_memos() -> None:
+    """Drop every memo entry (e.g. between per-plan timings)."""
+    sc = SparkContext._active_spark_context
+    live = sc is not None and sc.applicationId == _memo_app
+    with _memo_lock:
+        values = [value for _, value in _memos.values()]
+        _memos.clear()
+    if live:
+        for value in values:
+            _release(value)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

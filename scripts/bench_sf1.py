@@ -142,7 +142,7 @@ def main() -> None:
     from legislative_bills_database_spark.session import materialize_fully
 
     from legislative_bills_database_spark.plans import QUERIES
-    from legislative_bills_database_spark.session import get_spark
+    from legislative_bills_database_spark.session import clear_memos, get_spark
 
     spark = get_spark(app_name="lbd-bench-sf1", cpus=os.environ.get(
         "SPARK_GRAFT_CPUS", "32"))
@@ -173,12 +173,9 @@ def main() -> None:
         best = None
         for _ in range(3 if name in HOT_CELLS else N_RUNS):
             # per-PLAN semantics (the bench_skew rationale): clear the
-            # similarity-chain memos so each run pays its own chain
-            from legislative_bills_database_spark.plans import (
-                roundseven_queries as _r7,
-            )
-
-            _r7.clear_sim_caches()
+            # session memos so each run pays its own similarity chain —
+            # and its co-purchase, purchase-sym and centroid builds too
+            clear_memos()
             t0 = time.perf_counter()
             df = QUERIES[name](spark, SF1_DIR)
             materialize_fully(df)
@@ -188,7 +185,7 @@ def main() -> None:
         print(f"  {name}: {best:.3f}s", file=sys.stderr)
 
     # ratio vs the most recent sf0.1 full-detail run. The CF/jaccard
-    # family is memoized per (applicationId, sf_dir) since round 9, so
+    # family is session-memoized since round 9, so
     # BENCH_FULL's sweep-marginal cells (~0.05 s checkpoint hits) are
     # NOT per-plan denominators — measure those four per-plan here
     # (cache-cleared min-of-2 at sf0.1, ~1 min) so the scaling ratio
@@ -218,11 +215,7 @@ def main() -> None:
     for name in sorted(set(timings)):
         best = None
         for _ in range(3 if name in HOT_CELLS else N_RUNS):
-            from legislative_bills_database_spark.plans import (
-                roundseven_queries as _r7,
-            )
-
-            _r7.clear_sim_caches()
+            clear_memos()
             t0 = time.perf_counter()
             df = QUERIES[name](spark, sf01_dir)
             materialize_fully(df)

@@ -39,6 +39,7 @@ def main() -> None:
 
     from legislative_bills_database_spark.plans import QUERIES
     from legislative_bills_database_spark.session import (
+        clear_memos,
         get_spark,
         materialize_fully,
     )
@@ -66,13 +67,11 @@ def main() -> None:
         return round(best, 3)
 
     def timed(name: str, sf_dir: str) -> float:
-        from legislative_bills_database_spark.plans import (
-            roundseven_queries as _r7,
-        )
-
+        # per-plan timings: each run pays its own memoized builds
+        # (similarity chains, co-purchase, purchase-sym, centroids)
         best = None
         for _ in range(N_RUNS):
-            _r7.clear_sim_caches()
+            clear_memos()
             t0 = time.perf_counter()
             materialize_fully(QUERIES[name](spark, sf_dir))
             dt = time.perf_counter() - t0

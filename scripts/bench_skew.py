@@ -72,7 +72,7 @@ def main() -> None:
     from legislative_bills_database_spark.session import materialize_fully
 
     from legislative_bills_database_spark.plans import QUERIES
-    from legislative_bills_database_spark.session import get_spark
+    from legislative_bills_database_spark.session import clear_memos, get_spark
 
     spark = get_spark(
         app_name="lbd-bench-skew", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -83,15 +83,12 @@ def main() -> None:
             spark.read.parquet(f"{d}/{t}.parquet").count()
 
     def one_run(name: str, d: str) -> float:
-        # clear the roundseven similarity-chain memos so every timed
-        # run pays its own plan — this bench measures PLAN degradation
-        # under skew, and a memoized 100-row checkpoint hit (0.1 s)
-        # would silently replace the d²/2 cost the bench exists to see
-        from legislative_bills_database_spark.plans import (
-            roundseven_queries as _r7,
-        )
-
-        _r7.clear_sim_caches()
+        # clear the session memos so every timed run pays its own plan
+        # — this bench measures PLAN degradation under skew, and a
+        # memoized 100-row checkpoint hit (0.1 s) would silently replace
+        # the d²/2 cost the bench exists to see. Each run now also pays
+        # the co-purchase, purchase-sym and centroid builds.
+        clear_memos()
         t0 = time.perf_counter()
         df = QUERIES[name](spark, d)
         materialize_fully(df)

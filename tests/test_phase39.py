@@ -55,14 +55,9 @@ def test_cluster_scatter_structure(spark):
 
 
 def test_km_fit_is_memoized(spark):
-    from legislative_bills_database_spark.plans.clustering_queries import (
-        _KM_CACHE,
-        _KM_ROUNDS,
-        _km_fit,
-    )
+    from legislative_bills_database_spark.plans.clustering_queries import _km_fit
 
     a = _km_fit(spark, SF_DIR)
-    assert (SF_DIR, _KM_K, _KM_ROUNDS) in _KM_CACHE
     b = _km_fit(spark, SF_DIR)
     assert a is b  # second call is the cached object, no re-fit
 

@@ -1,24 +1,35 @@
 """The session factory's JIT profile reaches the driver JVM, and a
 caller's ``extraJavaOptions`` still win over it; its Python UDFs run in
 one pool forked from the package's worker daemon, which re-reads a zip
-archive's directory only when the archive changed."""
+archive's directory only when the archive changed. The session memo
+returns the stored object on a hit, rebuilds (and releases) an entry
+whose input files changed, and belongs to one application."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import threading
 import zipfile
 import zipimport
 from pathlib import Path
+from types import SimpleNamespace
 
+import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import REPO
-from legislative_bills_database_spark.session import PACKAGE_PARENT, get_spark
+from conftest import REPO, SF_DIR
+from legislative_bills_database_spark import session
+from legislative_bills_database_spark.plans import ORACLE, QUERIES
+from legislative_bills_database_spark.session import PACKAGE_PARENT, get_spark, memo
+from tests.oracle_util import compare
 from legislative_bills_database_spark.worker_daemon import invalidate_caches
 
 FLAGS = {
@@ -151,3 +162,101 @@ def test_python_udf_runs_from_outside_the_repository(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip().splitlines()[-1] == "[1, 2, 3]"
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _checkpointed(df):
+    return df.localCheckpoint(eager=True)
+
+
+def _persisted(df):
+    df = df.persist()
+    df.count()
+    return df
+
+
+def test_memo_hit_returns_the_stored_object(spark, tmp_path):
+    (tmp_path / "t.parquet").write_bytes(b"x")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    df = memo(spark, tmp_path, "frame", build)
+    assert memo(spark, tmp_path, "frame", build) is df
+    arr = memo(spark, tmp_path, ("fit", 2), lambda: np.arange(2))
+    assert memo(spark, tmp_path, ("fit", 2), lambda: np.zeros(2)) is arr
+    assert len(builds) == 1
+
+
+@pytest.mark.parametrize("materialize", [_checkpointed, _persisted])
+def test_memo_rebuilds_and_releases_when_files_change(spark, tmp_path, materialize):
+    table = tmp_path / "t.parquet"
+    table.write_bytes(b"x")
+    before = _persistent_rdds(spark)
+    old = memo(spark, tmp_path, "frame", lambda: materialize(spark.range(10)))
+    built = _persistent_rdds(spark)
+    assert built - before
+    table.write_bytes(b"xy")  # a rewritten input table
+    new = memo(spark, tmp_path, "frame", lambda: spark.range(5))
+    assert new is not old and new.count() == 5
+    released = _persistent_rdds(spark)
+    assert len(released) < len(built)
+    assert not (built - before) & released
+
+
+def test_memo_from_another_application_evicts_every_entry(spark, tmp_path):
+    memo(spark, tmp_path, "a", lambda: 1)
+    memo(spark, tmp_path, "b", lambda: 2)
+    other = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="other-app"))
+    assert memo(other, tmp_path, "c", lambda: 3) == 3
+    assert list(session._memos) == [(str(tmp_path), "c")]
+    assert memo(spark, tmp_path, "a", lambda: 4) == 4
+
+
+def test_memo_survives_concurrent_callers_and_rewrites(tmp_path):
+    table = tmp_path / "t.parquet"
+    table.write_bytes(b"x")
+    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="threads-app"))
+    errors = []
+
+    def call(i):
+        try:
+            for _ in range(200):
+                assert memo(app, tmp_path, ("k", i % 4), lambda: i % 4) == i % 4
+        except Exception as e:  # collected and asserted on below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for n in range(200):
+            table.write_bytes(b"x" * (n + 2))
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert sorted(k for _, k in session._memos) == [("k", i) for i in range(4)]
+
+
+@pytest.mark.parametrize("name", ["q_cc_labels", "q_item_cf_recs"])
+def test_memoized_queries_follow_a_rewritten_table(spark, tmp_path, name):
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    for f in os.listdir(SF_DIR):
+        shutil.copyfile(os.path.join(SF_DIR, f), sf_dir / f)
+    assert compare(QUERIES[name](spark, str(sf_dir)), ORACLE[name], str(sf_dir)) == []
+    lineitem = sf_dir / "lineitem.parquet"
+    table = pq.read_table(lineitem)
+    even = table.filter(pc.equal(pc.bit_wise_and(table["l_orderkey"], 1), 0))
+    pq.write_table(even, lineitem)
+    assert compare(QUERIES[name](spark, str(sf_dir)), ORACLE[name], str(sf_dir)) == []
