@@ -64,7 +64,11 @@ def budget_bills_with_data(budget_bills: DataFrame, bills: DataFrame) -> DataFra
 
 def chaptered_doc_ids(bills_joined: DataFrame) -> DataFrame:
     """Chaptered budget bills with the doc_id of their chaptered (last)
-    text version (legiscan_main.R:150,167-168)."""
+    text version (legiscan_main.R:150,167-168).
+
+    ``element_at(..., -1)`` never meets an empty ``texts`` array (an ANSI
+    error): the ``array_contains`` filter keeps only bills with a
+    Chaptered entry."""
     return bills_joined.filter(
         F.array_contains(F.col("texts.type"), "Chaptered")
     ).select(

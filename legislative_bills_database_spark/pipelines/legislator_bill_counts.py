@@ -9,7 +9,10 @@ committee filter → column drop.
 
 Scale shape: legislators are a bounded dimension (broadcast everywhere);
 bills shuffle once on the pivot group key. Zero driver-side loops — the
-reference's per-bill R loop (:103-135) is the sponsor-resolution join.
+reference's per-bill R loop (:103-135) is one projection over one scan
+of ``bills``, against the legislator ids collected into one broadcast
+row (:func:`resolve_sponsors`). The keep-latest window runs only on the
+side that needs the legislator attributes.
 """
 
 from __future__ import annotations
@@ -57,14 +60,17 @@ def run_legislator_bill_counts(
         bills, people, sessions, all_bills, special_people_id
     )
     run_id = run_id or new_run_id()
+    # one-partition reports: sorting inside the single partition gives
+    # orderBy's rows without its range exchange (and its sampling job)
     counts_path = write_csv_report(
-        counts.orderBy("Name"), out_dir,
+        counts.repartition(1).sortWithinPartitions("Name"), out_dir,
         f"all_bills_{all_bills}_all_legislators", run_id=run_id,
     )
     special_path = None
     if special is not None:
         special_path = write_csv_report(
-            special.orderBy("session", "bill"), out_dir,
+            special.repartition(1).sortWithinPartitions("session", "bill"),
+            out_dir,
             f"all_bills_{all_bills}_special_bills", run_id=run_id,
         )
     return counts_path, special_path
@@ -79,29 +85,33 @@ def resolve_sponsors(bills: DataFrame, legislator_ids: DataFrame) -> DataFrame:
        set-membership test, so one bill can credit several legislators;
     2. if NO primary sponsor matched, the first-listed sponsor gets
        credit if they are a legislator;
-    3. otherwise the bill is dropped.
+    3. otherwise the bill is dropped (also a bill with an empty or NULL
+       ``sponsors`` array: R's ``people_id[1]`` of an empty list matches
+       no legislator).
 
-    ``legislator_ids``: one column ``people_id`` (bounded → broadcast).
+    ``legislator_ids``: one column ``people_id`` (bounded). It is folded
+    into ONE broadcast row (the id set), so the rule is one projection
+    over one scan of ``bills``: credited ids per bill, then explode.
     """
-    ids = F.broadcast(legislator_ids.select("people_id").distinct())
-    primary = bills.withColumn(
-        "people_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.col("sponsors"), lambda s: s.sponsor_type_id == 1)
-                .getField("people_id")
-            )
-        ),
-    ).join(ids, "people_id")
-    unmatched = bills.join(
-        primary.select("session", "doc_key").distinct(),
-        ["session", "doc_key"],
-        "left_anti",
+    ids = F.broadcast(
+        legislator_ids.agg(F.collect_set("people_id").alias("__ids"))
     )
-    fallback = unmatched.withColumn(
-        "people_id", F.element_at(F.col("sponsors.people_id"), 1)
-    ).join(ids, "people_id")
-    return primary.unionByName(fallback)
+    primary = F.array_intersect(
+        F.array_distinct(
+            F.filter(F.col("sponsors"), lambda s: s.sponsor_type_id == 1)
+            .getField("people_id")
+        ),
+        F.col("__ids"),
+    )
+    first = F.try_element_at(F.col("sponsors.people_id"), F.lit(1))
+    credited = F.when(F.size(primary) > 0, primary).when(
+        F.array_contains(F.col("__ids"), first), F.array(first)
+    )
+    return (
+        bills.crossJoin(ids)
+        .select(F.explode(credited).alias("people_id"), "*")
+        .drop("__ids")
+    )
 
 
 def legislator_bill_counts(
@@ -130,9 +140,9 @@ def legislator_bill_counts(
     if not all_bills:
         passed = passed.filter(F.col("bill_type") == "B")
 
-    matches = resolve_sponsors(
-        passed, legislators.select(F.col("id").alias("people_id"))
-    )
+    # the ids keep_latest yields are exactly people's distinct ids, so
+    # the resolve side needs no window
+    matches = resolve_sponsors(passed, people.select("people_id"))
 
     wide = pivot_count(matches, "people_id", "session", sessions)
     # legislators with zero passed bills stay in the output (the reference

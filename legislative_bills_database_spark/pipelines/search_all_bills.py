@@ -38,7 +38,9 @@ def run_search_all_bills(
     bills = read_bills(spark, data_root, sessions)
     result = search_all_bills(bills, terms)
     return write_csv_report(
-        result.orderBy("session", "bill_number"), out_dir, save_name, run_id=run_id
+        # one-partition report: orderBy's rows without its sampling job
+        result.repartition(1).sortWithinPartitions("session", "bill_number"),
+        out_dir, save_name, run_id=run_id,
     )
 
 
@@ -48,13 +50,14 @@ def search_all_bills(bills: DataFrame, terms: list[str]) -> DataFrame:
     Matching is CASE-SENSITIVE substring (the reference's ``grepl``
     default, legiscan_search_all_bills.R:90-91); terms act as stems
     ('affordab', :52). The first texts.state_link is kept with its
-    '#...' fragment stripped (:84,98).
+    '#...' fragment stripped (:84,98); a bill without texts keeps a NULL
+    link (R's ``[1]`` of an empty vector is NA).
     """
     proj = bills.select(
         "bill_number",
         F.col("session_name").alias("session"),
         "status",
-        F.element_at(F.col("texts.state_link"), 1).alias("link"),
+        F.try_element_at(F.col("texts.state_link"), F.lit(1)).alias("link"),
         "title",
         "description",
     )

@@ -7,6 +7,7 @@ fetch of chaptered texts through a fake transport — zero network.
 from __future__ import annotations
 
 import base64
+import csv
 import glob
 from pathlib import Path
 
@@ -24,6 +25,17 @@ from legislative_bills_database_spark.sources.rest import RestClient
 from tests.test_pipelines import data_root  # noqa: F401
 
 
+def _csv_rows(path: str) -> list[dict]:
+    [part] = glob.glob(f"{path}/part-*.csv")
+    with open(part, newline="") as fh:
+        return list(csv.DictReader(fh))
+
+
+def _assert_sorted(rows: list[dict], *keys: str) -> None:
+    order = [tuple(r[k] for k in keys) for r in rows]
+    assert len(order) > 1 and order == sorted(order), order
+
+
 def test_run_legislator_bill_counts(spark, data_root, tmp_path):  # noqa: F811
     counts_path, special_path = run_legislator_bill_counts(
         spark, data_root, str(tmp_path), run_id="RID"
@@ -34,6 +46,9 @@ def test_run_legislator_bill_counts(spark, data_root, tmp_path):  # noqa: F811
     assert len(counts_csv.splitlines()) == 4  # header + 3 legislators
     special_csv = Path(glob.glob(f"{special_path}/part-*.csv")[0]).read_text()
     assert "AB128" in special_csv and "AB1" in special_csv
+    # single-file reports keep the reference's row order
+    _assert_sorted(_csv_rows(counts_path), "Name")
+    _assert_sorted(_csv_rows(special_path), "session", "bill")
 
 
 def test_run_legislator_bill_counts_derives_sessions(spark, data_root, tmp_path):  # noqa: F811
@@ -56,6 +71,7 @@ def test_run_search_all_bills(spark, data_root, tmp_path):  # noqa: F811
     csv = Path(glob.glob(f"{path}/part-*.csv")[0]).read_text()
     assert "AB1" in csv and "AB128" in csv
     assert "http://x/ab1\n" in csv or "http://x/ab1," in csv  # fragment stripped
+    _assert_sorted(_csv_rows(path), "session", "bill_number")
 
 
 def test_run_budget_bill_search_full_chain(spark, data_root, tmp_path):  # noqa: F811

@@ -26,6 +26,9 @@ from legislative_bills_database_spark.pipelines import (
     search_all_bills,
     search_html_reports,
 )
+from legislative_bills_database_spark.pipelines.legislator_bill_counts import (
+    resolve_sponsors,
+)
 from legislative_bills_database_spark.sources.documents import (
     read_bills,
     read_people,
@@ -191,6 +194,45 @@ def test_legislator_bill_counts_end_to_end(spark, data_root):
     assert dodd == {(S23, "AB1"), (S21, "AB128")}
 
 
+def test_empty_sponsors_bill_is_dropped(spark, tmp_path):
+    """A passed bill with ``sponsors: []`` credits nobody (R's
+    ``people_id[1]`` of an empty list matches no legislator) and must not
+    fail the run: under ANSI mode ``element_at`` on ``[]`` raises."""
+    _write(tmp_path, S23, "people", "101", _person(101, "Sen", "Alice", "SD-03"))
+    _write(tmp_path, S23, "bill", "AB1", _bill(
+        "AB1", "B", 4, [], [], session_name=S23))
+    _write(tmp_path, S23, "bill", "AB2", _bill(
+        "AB2", "B", 4, [(101, 1)], [], session_name=S23))
+    _write(tmp_path, S23, "bill", "AB3", _bill(
+        "AB3", "B", 4, [(101, 2)], [], session_name=S23))
+    counts, special = legislator_bill_counts(
+        read_bills(spark, str(tmp_path)), read_people(spark, str(tmp_path)),
+        [S23], special_people_id=101,
+    )
+    assert [(r["Name"], r[S23]) for r in counts.collect()] == [("Alice", 2)]
+    assert sorted(r["bill"] for r in special.collect()) == ["AB2", "AB3"]
+
+
+def test_resolve_sponsors_scans_bills_once(spark, data_root):
+    """One projection over one scan: the executed plan reads the bill tree
+    once and has neither the anti-join nor the union of a fallback
+    branch."""
+    matches = resolve_sponsors(
+        read_bills(spark, data_root), read_people(spark, data_root).select("people_id")
+    )
+    plan = matches._jdf.queryExecution().executedPlan().toString()
+    bill_scans = [
+        line for line in plan.splitlines()
+        if "FileScan json" in line and "ReadSchema: struct<bill:" in line
+    ]
+    assert len(bill_scans) == 1, plan
+    assert "LeftAnti" not in plan and "Union" not in plan, plan
+    assert {(r["doc_key"], r["people_id"]) for r in matches.collect()} == {
+        ("AB1", 101), ("AB1", 16285), ("SB3", 102), ("AB4", 101),
+        ("SB5", 101), ("AB10", 102), ("AB128", 16285),
+    }
+
+
 def test_legislator_bill_counts_type_gate(spark, data_root):
     bills = read_bills(spark, data_root)
     people = read_people(spark, data_root)
@@ -211,6 +253,21 @@ def test_search_all_bills_end_to_end(spark, data_root):
     assert set(rows) == {"AB1", "AB128"}
     assert rows["AB1"]["link"] == "http://x/ab1"  # '#frag' stripped
     assert rows["AB1"]["session"] == S23
+
+
+def test_search_keeps_bill_without_texts(spark, tmp_path):
+    """A matching bill with ``texts: []`` stays with a NULL link (R's
+    ``[1]`` of an empty vector is NA) and must not fail the run: under
+    ANSI mode ``element_at`` on ``[]`` raises."""
+    _write(tmp_path, S23, "bill", "AB1", _bill(
+        "AB1", "B", 4, [], [], desc="housing", session_name=S23))
+    _write(tmp_path, S23, "bill", "AB2", _bill(
+        "AB2", "B", 4, [], [(1, "Introduced", "http://x/ab2#f")],
+        desc="housing", session_name=S23))
+    out = search_all_bills(read_bills(spark, str(tmp_path)), ["housing"])
+    assert {r["bill_number"]: r["link"] for r in out.collect()} == {
+        "AB1": None, "AB2": "http://x/ab2",
+    }
 
 
 def test_budget_bill_pipeline_relational_core(spark, data_root):

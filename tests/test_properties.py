@@ -21,6 +21,9 @@ from legislative_bills_database_spark.functions.text import shingles, tokens
 from legislative_bills_database_spark.operators.aggregates import pivot_count, row_total
 from legislative_bills_database_spark.operators.dedup import keep_latest
 from legislative_bills_database_spark.operators.joins import session_label_for_year
+from legislative_bills_database_spark.pipelines.legislator_bill_counts import (
+    resolve_sponsors,
+)
 
 SETTINGS = dict(
     max_examples=15,
@@ -336,3 +339,62 @@ def test_largest_remainder_allocation_properties(spark, items, total):
     for r in out:
         exact = total * r.p / sp
         assert exact - 1 < r.alloc < exact + 1
+
+
+SPONSORS_SCHEMA = (
+    "doc_key string, "
+    "sponsors array<struct<people_id: bigint, sponsor_type_id: int>>"
+)
+# every branch of the sponsor rule, in each generated batch
+SPONSOR_EDGE_BILLS = [
+    ("co_primary", [(1, 1), (2, 1), (3, 2)]),
+    ("dup_primary", [(1, 1), (1, 1), (9, 1)]),
+    ("primary_not_legislator", [(9, 1), (2, 2)]),
+    ("fallback_first", [(3, 2), (1, 2)]),
+    ("null_people_id", [(None, 1), (None, 2)]),
+    ("null_first_listed", [(None, 2), (1, 2)]),
+    ("empty", []),
+    ("null", None),
+]
+
+
+def _sponsor_rule(bills, ids):
+    """The counts rule (legislator_bill_counts_run.R:114-122) in plain
+    Python: every distinct primary sponsor that is a legislator, else the
+    first-listed sponsor if a legislator, else nothing."""
+    out = []
+    for key, sponsors in bills:
+        primary = {p for p, t in sponsors or [] if t == 1} & ids
+        if primary:
+            out += [(key, p) for p in primary]
+        elif sponsors and sponsors[0][0] in ids:
+            out.append((key, sponsors[0][0]))
+    return sorted(out)
+
+
+PEOPLE = st.one_of(st.none(), st.integers(1, 6), st.just(9))
+
+
+@given(
+    sponsors=st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(
+                st.tuples(PEOPLE, st.one_of(st.none(), st.integers(1, 2))),
+                max_size=4,
+            ),
+        ),
+        max_size=12,
+    ),
+    ids=st.lists(st.one_of(st.none(), st.integers(1, 6)), max_size=6),
+)
+@settings(**{**SETTINGS, "max_examples": 4})
+def test_resolve_sponsors_matches_python_rule(spark, sponsors, ids):
+    bills = SPONSOR_EDGE_BILLS + [(f"gen{i}", s) for i, s in enumerate(sponsors)]
+    got = resolve_sponsors(
+        spark.createDataFrame(bills, SPONSORS_SCHEMA),
+        spark.createDataFrame([(i,) for i in [1, 2] + ids], "people_id bigint"),
+    ).select("doc_key", "people_id")
+    assert sorted(tuple(r) for r in got.collect()) == _sponsor_rule(
+        bills, {1, 2} | {i for i in ids if i is not None}
+    )
