@@ -16,7 +16,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from legislative_bills_database_spark.plans import ORACLE, QUERIES
-from legislative_bills_database_spark.session import tune_session
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,7 +28,6 @@ def entry(spark: SparkSession) -> DataFrame:
     (legislator_bill_counts_run.R:89-124): scan → filter → broadcast join
     → pivot count.
     """
-    tune_session(spark)
     return QUERIES["q_pivot_count"](spark, SMOKE_SF_DIR)
 
 

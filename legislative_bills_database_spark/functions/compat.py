@@ -34,11 +34,3 @@ def exact_avg(col: Column | str) -> Column:
 def sql_exact_sum(expr: str) -> str:
     """DuckDB twin of :func:`exact_sum`."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
-
-
-def sql_exact_avg(expr: str) -> str:
-    """DuckDB twin of :func:`exact_avg`."""
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
-        f" / COUNT({expr}) AS DOUBLE)"
-    )

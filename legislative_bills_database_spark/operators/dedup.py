@@ -563,10 +563,10 @@ def connected_components(
         # shuffles only the label frame. The distinct's partitioning is
         # hash(src, dst), useless to the join; a plain persist kept
         # that layout and re-exchanged the full edge list every round
-        # (probed: scripts/probe_cc_layout.py, per-round edge-side
-        # Exchange gone). Bench-invisible locally (the ≤2 M-edge guard
-        # routes every fixture to the driver union-find) — this is the
-        # declared 100 TB loop path.
+        # (probed with a one-off script over synthetic edges: the
+        # per-round edge-side Exchange was gone). Bench-invisible
+        # locally (the ≤2 M-edge guard routes every fixture to the
+        # driver union-find) — this is the declared 100 TB loop path.
         .repartition("dst")
         .persist()
     )

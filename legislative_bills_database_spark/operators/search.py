@@ -1,6 +1,5 @@
 """Text-search filter operators (the reference's search surface).
 
-- regex row filter           legiscan_main.R:90
 - case-insensitive substring legiscan_main.R:213
 - multi-term OR over fields  legiscan_search_all_bills.R:88-93
 
@@ -14,10 +13,6 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def regex_filter(df: DataFrame, col: str, pattern: str) -> DataFrame:
-    return df.filter(F.col(col).rlike(pattern))
 
 
 def ci_contains(col: Column | str, term: str) -> Column:

@@ -136,7 +136,7 @@ def run_budget_bill_search(
     report = search_html_reports(html_docs, terms)
     return write_csv_report(
         report, out_dir, "budget_bill_search", run_id=run_id,
-        single_file=False, partition_by=["term"],
+        partition_by=["term"],
     )
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.compat import exact_sum, sql_exact_sum
 from ..io import load_table, load_tables
 from ..operators.basket import cooccurrence_triples
-from ..session import memo
+from ..session import memo, scoped_conf
 from .registry import query
 
 
@@ -1767,7 +1767,6 @@ def q_bucketed_join(spark, sf_dir):
     tag = uuid.uuid4().hex[:8]
     tmp = tempfile.mkdtemp(prefix="q_bucketed_join_")
     to, tc = f"t_bj_orders_{tag}", f"t_bj_cust_{tag}"
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         bo = stage_bucketed(
             spark,
@@ -1785,20 +1784,19 @@ def q_bucketed_join(spark, sf_dir):
             8,
             f"{tmp}/c",
         )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bo.join(bc, bo.o_custkey == bc.c_custkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        from ..functions.compat import exact_sum as _es
-
-        result = joined.groupBy("c_mktsegment").agg(
-            F.count("*").cast("long").alias("n_orders"),
-            _es("o_totalprice").alias("revenue"),
-        )
-        # materialize before the staging tables are dropped
-        return result.localCheckpoint(eager=True)
+        with scoped_conf(
+            spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+        ):
+            joined = bo.join(bc, bo.o_custkey == bc.c_custkey)
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, "bucketed join must not shuffle"
+            result = joined.groupBy("c_mktsegment").agg(
+                F.count("*").cast("long").alias("n_orders"),
+                exact_sum("o_totalprice").alias("revenue"),
+            )
+            # materialize before the staging tables are dropped
+            return result.localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.sql(f"DROP TABLE IF EXISTS {to}")
         spark.sql(f"DROP TABLE IF EXISTS {tc}")
         import shutil
@@ -2030,13 +2028,13 @@ def q_stream_totals(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .load(json_dir)
         )
-        from ..streaming.events import _census_stream_confs
+        from ..streaming.events import CENSUS_STREAM_CONFS
 
         # shuffle=8 (not lower): applyInPandasWithState pushes all rows
         # through Python workers, so partitions = parallel workers here —
         # 4 measured slower (9.7 s vs 8.0 s), state overhead is not the
         # bottleneck for this census
-        with _census_stream_confs(spark, "8"):
+        with scoped_conf(spark, CENSUS_STREAM_CONFS):
             q = (
                 running_user_totals(stream_df)
                 .writeStream.format("memory")

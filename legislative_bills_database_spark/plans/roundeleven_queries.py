@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..operators import corpus as Co
+from ..session import scoped_conf
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -130,23 +131,10 @@ def q_aqe_skew_census(spark, sf_dir):
         )
 
     toggle = "spark.sql.adaptive.skewJoin.enabled"
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in [*_AQE_SKEW_CONFS, toggle]
-    }
-    try:
-        for k, v in _AQE_SKEW_CONFS.items():
-            spark.conf.set(k, v)
-        spark.conf.set(toggle, "true")
+    with scoped_conf(spark, {**_AQE_SKEW_CONFS, toggle: "true"}):
         n_on, pb_on, smj_on, reads_on = run()
-        spark.conf.set(toggle, "false")
+    with scoped_conf(spark, {**_AQE_SKEW_CONFS, toggle: "false"}):
         n_off, pb_off, smj_off, reads_off = run()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (

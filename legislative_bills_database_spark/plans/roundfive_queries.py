@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import exact_sum, sql_exact_sum
 from ..io import load_table, load_tables
-from ..session import memo
+from ..session import memo, scoped_conf
 from .registry import query
 
 
@@ -1910,19 +1910,15 @@ def q_join_strategy_census(spark, sf_dir):
 
     joined = orders.join(customer, orders.o_custkey == customer.c_custkey)
     default_strategy = strategy(joined)
-    # default when unset is 10 MiB; restoring "" would be rejected
+    # default when unset is 10 MiB
     thr = spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold", "10485760b"
     )
-    old = thr
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         forced = orders.join(
             customer, orders.o_custkey == customer.c_custkey
         )
         no_bcast_strategy = strategy(forced)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     return spark.createDataFrame(
         [(default_strategy, no_bcast_strategy, str(thr))],
         "default_strategy string, no_broadcast_strategy string, "

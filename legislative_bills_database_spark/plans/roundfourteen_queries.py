@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..session import scoped_conf
 from .registry import query
 from .roundthirteen_queries import (
     _FS_MATCH,
@@ -1140,7 +1141,7 @@ def q_stream_rate_limit(spark, sf_dir):
     import tempfile
     import uuid as _uuid
 
-    from ..streaming.events import _census_stream_confs
+    from ..streaming.events import CENSUS_STREAM_CONFS
 
     events = load_table(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="q_stream_rate_limit_")
@@ -1166,7 +1167,7 @@ def q_stream_rate_limit(spark, sf_dir):
                 F.count(F.lit(1)).alias("n")
             )
             name = f"q_stream_rate_{label}_" + _uuid.uuid4().hex[:8]
-            with _census_stream_confs(spark, "8"):
+            with scoped_conf(spark, CENSUS_STREAM_CONFS):
                 q = (
                     agg.writeStream.format("memory")
                     .queryName(name)
@@ -1692,21 +1693,10 @@ def q_runtime_filter_census(spark, sf_dir):
         "applicationSideScanSizeThreshold": "0",
     }
     key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-    prev = {k: spark.conf.get(k, None) for k in (*confs, key)}
     rows = []
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        spark.conf.set(key, "true")
-        rows.append(("bloom-on", *map(int, measure())))
-        spark.conf.set(key, "false")
-        rows.append(("bloom-off", *map(int, measure())))
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    for mode, on in (("bloom-on", "true"), ("bloom-off", "false")):
+        with scoped_conf(spark, {**confs, key: on}):
+            rows.append((mode, *map(int, measure())))
     return spark.createDataFrame(
         rows,
         "mode string, shuffle_records long, n_bloom_nodes long,"

@@ -30,6 +30,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_tables
+from ..session import scoped_conf
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1655,13 +1656,12 @@ def q_stream_state_census(spark, sf_dir):
     import uuid as _uuid
 
     from ..io import load_table
-    from ..streaming.events import _census_stream_confs
+    from ..streaming.events import CENSUS_STREAM_CONFS
 
     events = load_table(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="q_stream_state_")
     names: dict[str, str] = {}
     prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
     try:
         json_dir = f"{tmp}/events_json"
         events.select("event_id", "ts", "user_id", "event_type", "value"
@@ -1684,22 +1684,15 @@ def q_stream_state_census(spark, sf_dir):
             agg = stream_df.groupBy(
                 F.window("ts", "1 hour").alias("w"), "event_type"
             ).agg(F.count(F.lit(1)).alias("n"))
-            spark.conf.set(prov_key, cls)
-            try:
-                with _census_stream_confs(spark, "8"):
-                    q = (
-                        agg.writeStream.format("memory")
-                        .queryName(name)
-                        .outputMode("update")
-                        .trigger(availableNow=True)
-                        .start()
-                    )
-                    q.awaitTermination(120)
-            finally:
-                if prev_prov is None:
-                    spark.conf.unset(prov_key)
-                else:
-                    spark.conf.set(prov_key, prev_prov)
+            with scoped_conf(spark, {prov_key: cls, **CENSUS_STREAM_CONFS}):
+                q = (
+                    agg.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("update")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination(120)
             state_rows = mem_bytes = n_batches = 0
             for p in q.recentProgress:
                 ops = p.get("stateOperators") or []

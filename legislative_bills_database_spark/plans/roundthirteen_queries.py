@@ -22,6 +22,7 @@ import string
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..session import scoped_conf
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -366,7 +367,7 @@ def q_stream_tws_totals(spark, sf_dir):
     import tempfile
     import uuid as _uuid
 
-    from ..streaming.events import _census_stream_confs
+    from ..streaming.events import CENSUS_STREAM_CONFS
     from ..streaming.stateful import (
         running_user_totals,
         running_user_totals_tws,
@@ -414,11 +415,10 @@ def q_stream_tws_totals(spark, sf_dir):
                 .load(json_dir)
             )
             name = "tws_census_" + _uuid.uuid4().hex[:8]
-            prev = spark.conf.get(prov_key, None)
-            spark.conf.set(prov_key, _TWS_PROVIDERS[provider])
+            confs = {prov_key: _TWS_PROVIDERS[provider], **CENSUS_STREAM_CONFS}
             q = None
             try:
-                with _census_stream_confs(spark, "8"):
+                with scoped_conf(spark, confs):
                     q = (
                         op(stream_df)
                         .writeStream.format("memory")
@@ -457,11 +457,6 @@ def q_stream_tws_totals(spark, sf_dir):
                 else:
                     failure = s.splitlines()[0][:80]
                 return (api, provider, False, failure, None, None)
-            finally:
-                if prev is None:
-                    spark.conf.unset(prov_key)
-                else:
-                    spark.conf.set(prov_key, prev)
             streamed = (
                 spark.table(name)
                 .groupBy("user_id")
@@ -1661,17 +1656,10 @@ def q_window_topk_census(spark, sf_dir):
         return shuffled, n_wgl, int(row.nr), int(row.c)
 
     key = "spark.sql.optimizer.windowGroupLimitThreshold"
-    prev = spark.conf.get(key)
     rows = []
-    try:
-        spark.conf.set(key, "1000")
-        s_on = measure()
-        rows.append(("pushdown-on", *map(int, s_on)))
-        spark.conf.set(key, "-1")
-        s_off = measure()
-        rows.append(("pushdown-off", *map(int, s_off)))
-    finally:
-        spark.conf.set(key, prev)
+    for mode, threshold in (("pushdown-on", "1000"), ("pushdown-off", "-1")):
+        with scoped_conf(spark, {key: threshold}):
+            rows.append((mode, *map(int, measure())))
     return spark.createDataFrame(
         rows,
         "mode string, shuffle_records long, n_wgl_nodes long,"

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..session import scoped_conf
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -835,19 +836,18 @@ def q_stream_state_scale(spark, sf_dir):
     Scale shape: the events fixture lands once as 4 time-ordered JSON
     files; 2 providers × 3 cardinalities = 6 real availableNow runs
     with 8 shuffle partitions (state commit overhead is per-partition
-    per-trigger, see streaming.events._census_stream_confs)."""
+    per-trigger, see streaming.events.CENSUS_STREAM_CONFS)."""
     import shutil
     import tempfile
     import uuid as _uuid
 
-    from ..streaming.events import _census_stream_confs
+    from ..streaming.events import CENSUS_STREAM_CONFS
     from .roundnine_queries import _STATE_PROVIDERS
 
     events = load_table(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="q_stream_state_scale_")
     names: list[str] = []
     prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
     try:
         json_dir = f"{tmp}/events_json"
         events.select(
@@ -880,32 +880,27 @@ def q_stream_state_scale(spark, sf_dir):
                     F.window("ts", "1 hour").alias("w"),
                     salted_key.alias("k"),
                 ).agg(F.count(F.lit(1)).alias("n"))
-                spark.conf.set(prov_key, cls)
-                try:
-                    with _census_stream_confs(spark, "8"):
-                        q = (
-                            agg.writeStream.format("memory")
-                            .queryName(name)
-                            .outputMode("update")
-                            .trigger(availableNow=True)
-                            .start()
+                with scoped_conf(
+                    spark, {prov_key: cls, **CENSUS_STREAM_CONFS}
+                ):
+                    q = (
+                        agg.writeStream.format("memory")
+                        .queryName(name)
+                        .outputMode("update")
+                        .trigger(availableNow=True)
+                        .start()
+                    )
+                    # availableNow must DRAIN within the budget: on
+                    # timeout the stream would keep running after
+                    # the scope restores the provider conf and the
+                    # progress/state rows read would reflect a
+                    # half-finished run — fail loudly instead.
+                    if not q.awaitTermination(180):
+                        q.stop()
+                        raise RuntimeError(
+                            f"q_stream_state_scale: {name} did not "
+                            f"drain in 180s; census row meaningless"
                         )
-                        # availableNow must DRAIN within the budget: on
-                        # timeout the stream would keep running after
-                        # the provider conf is restored below and the
-                        # progress/state rows read would reflect a
-                        # half-finished run — fail loudly instead.
-                        if not q.awaitTermination(180):
-                            q.stop()
-                            raise RuntimeError(
-                                f"q_stream_state_scale: {name} did not "
-                                f"drain in 180s; census row meaningless"
-                            )
-                finally:
-                    if prev_prov is None:
-                        spark.conf.unset(prov_key)
-                    else:
-                        spark.conf.set(prov_key, prev_prov)
                 state_rows = mem_bytes = n_batches = 0
                 for p in q.recentProgress:
                     ops = p.get("stateOperators") or []
@@ -1867,23 +1862,14 @@ def q_agg_pushdown_census(spark, sf_dir):
     path = f"{sf_dir}/orders.parquet"
     v1_key = "spark.sql.sources.useV1SourceList"
     push_key = "spark.sql.parquet.aggregatePushdown"
-    prev_v1 = spark.conf.get(v1_key, None)
-    prev_push = spark.conf.get(push_key, None)
     rows = []
-    try:
-        for mode, v1list, push in [
-            ("v2_pushdown", "", "true"),
-            ("v2_no_pushdown", "", "false"),
-            ("v1_default", None, "true"),
-        ]:
-            if v1list is None:
-                if prev_v1 is None:
-                    spark.conf.unset(v1_key)
-                else:
-                    spark.conf.set(v1_key, prev_v1)
-            else:
-                spark.conf.set(v1_key, v1list)
-            spark.conf.set(push_key, push)
+    # v1_default leaves useV1SourceList as the session has it
+    for mode, confs in [
+        ("v2_pushdown", {v1_key: "", push_key: "true"}),
+        ("v2_no_pushdown", {v1_key: "", push_key: "false"}),
+        ("v1_default", {push_key: "true"}),
+    ]:
+        with scoped_conf(spark, confs):
             # long columns only: pushdown bails if ANY aggregate is
             # on an unsupported type (the fixture's timestamp column
             # silently disabled it — count(lit) likewise compiles to
@@ -1909,15 +1895,6 @@ def q_agg_pushdown_census(spark, sf_dir):
                     int(out["mx_cust"]),
                 )
             )
-    finally:
-        if prev_v1 is None:
-            spark.conf.unset(v1_key)
-        else:
-            spark.conf.set(v1_key, prev_v1)
-        if prev_push is None:
-            spark.conf.unset(push_key)
-        else:
-            spark.conf.set(push_key, prev_push)
     return spark.createDataFrame(
         rows,
         "mode string, agg_pushed long, scan_rows long, n long,"

@@ -6,7 +6,7 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   the DuckDB oracle is UTC-naive. Pinning UTC makes them comparable.
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
   — the local plan is the same plan a 1000-executor cluster would get.
-- ``spark.sql.shuffle.partitions`` sized to local cores here; on a real
+- ``spark.sql.shuffle.partitions`` 32 here (``SHUFFLE_PARTITIONS``); on a real
   cluster AQE's coalescePartitions makes the static number mostly moot.
 - Arrow enabled for any pandas-UDF path (vectorized batch transfer).
 - A JIT profile for the driver JVM (``JIT_PROFILE``): HotSpot's four
@@ -45,6 +45,21 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   UDF. The daemon is a static conf, so like the JIT profile
   it applies only when this factory creates the context.
 
+The runtime SQL defaults live in one table, ``SQL_DEFAULTS``:
+``get_spark`` builds its session with them, and ``tune_session`` sets
+them on a session built elsewhere (the registry applies it to every
+query call).
+
+Conf overrides (``scoped_conf``): code that needs a different runtime
+SQL conf for a while (a census forcing a join strategy, a stream run
+with few shuffle partitions, a state-store provider) sets it only inside
+``with scoped_conf(spark, {key: value, ...}):``. On exit, also by an
+exception, each key gets back what it had: a key that was unset is unset
+again, so the session never keeps an explicit setting it did not have.
+Scopes nest. This is the package's only place that sets or unsets confs
+on a live session besides ``tune_session``; a writer-level setting (e.g.
+``partitionOverwriteMode``) goes on the writer as an ``option`` instead.
+
 Session memo (``memo``): the one in-memory store for frames and fits
 that several queries share (co-purchase edges, graph layouts, k-means
 and IVF centroids, PQ codebooks, similarity chains).
@@ -72,6 +87,7 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import contextmanager
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
@@ -86,6 +102,30 @@ JIT_PROFILE = (
     " -XX:Tier4CompileThreshold=150000"
     " -XX:Tier4BackEdgeThreshold=400000"
 )
+# runtime SQL defaults of get_spark and tune_session (see the module docstring)
+SQL_DEFAULTS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # coalesce small shuffles below core-count parallelism too: tiny
+    # exchanges (iterative-loop label/rank frames, dim-side aggs) are
+    # pure scheduler overhead at 32 tasks; big shuffles still target
+    # advisoryPartitionSizeInBytes. Spark's own docs recommend
+    # parallelismFirst=false in production.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # fixture events.ts is parquet TIMESTAMP(NANOS) — illegal for Spark's
+    # reader; read as long nanos, io.load_table converts to µs timestamps
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+# get_spark's shuffle width unless the caller passes shuffle_partitions
+SHUFFLE_PARTITIONS = 32
+# spill-aware split sizing: scan partitions stay ~128 MB so a 100 TB
+# table fans out to ~800k well-sized tasks rather than fewer oversized
+# ones that spill; a deployment changes it with spark.conf.set
+MAX_PARTITION_BYTES = "134217728"
 
 
 def get_spark(
@@ -94,33 +134,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # coalesce small shuffles below core-count parallelism too: tiny
-        # exchanges (iterative-loop label/rank frames, dim-side aggs) are
-        # pure scheduler overhead at 32 tasks; big shuffles still target
-        # advisoryPartitionSizeInBytes. Spark's own docs recommend
-        # parallelismFirst=false in production.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # spill-aware split sizing: scan partitions stay ~128 MB so a
-        # 100 TB table fans out to ~800k well-sized tasks rather than
-        # fewer oversized ones that spill; override per-deployment
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
-        # fixture events.ts is parquet TIMESTAMP(NANOS) — illegal for Spark's
-        # reader; read as long nanos, io.load_table converts to µs timestamps
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=SQL_DEFAULTS)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or SHUFFLE_PARTITIONS))
+        .config("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.defaultJavaOptions", JIT_PROFILE)
         .config("spark.ui.enabled", "false")
@@ -133,6 +152,24 @@ def get_spark(
     if PACKAGE_PARENT not in paths:
         env["PYTHONPATH"] = os.pathsep.join(p for p in [PACKAGE_PARENT, *paths] if p)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set the runtime SQL confs ``confs`` for the body of a ``with`` and
+    put each key back afterwards, also when the body raises: a key that
+    was unset is unset again, any other gets its old value."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def release_checkpoint(df) -> None:
@@ -222,18 +259,9 @@ def clear_memos() -> None:
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-built session
-    (the driver hands us one; memory/master are fixed by then)."""
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
-        ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
+    """Apply ``SQL_DEFAULTS`` to an externally-built session (the driver
+    hands us one; memory/master are fixed by then)."""
+    for k, v in SQL_DEFAULTS.items():
         try:
             spark.conf.set(k, v)
         except Exception:

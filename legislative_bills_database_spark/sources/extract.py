@@ -13,8 +13,10 @@ Decoders available in this container:
 - PDF: ``pypdf`` when importable; otherwise a minimal built-in extractor
   for standard uncompressed-or-Flate text streams (zlib + Tj/TJ operator
   scan) — sufficient for simple text PDFs and the test fixtures, clearly
-  the fallback path, never silently empty (raises on no extractable
-  text when strict).
+  the fallback path. Neither raises on a PDF without extractable text:
+  ``pdf_to_text`` returns an empty string and ``read_pdf_lines`` one
+  empty line for that file. Failing loudly or counting such files is
+  open work (ROADMAP item 3, bad input).
 """
 
 from __future__ import annotations

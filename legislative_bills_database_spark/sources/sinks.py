@@ -5,9 +5,8 @@ The reference writes ``output/<uuid>_<name>.csv`` per run
 legislator_bill_counts_run.R:156-157). Spark's CSV sink writes a
 directory of part files; for the reference's report-sized outputs we
 coalesce to one partition so each report is a single readable CSV part —
-a deliberate small-output choice, NOT the default for large sinks
-(``single_file=False`` keeps full write parallelism and supports
-``partition_by`` for the per-term report family).
+a deliberate small-output choice. A ``partition_by`` write (the per-term
+report family) is not coalesced and keeps full write parallelism.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ def write_csv_report(
     out_dir: str,
     name: str,
     run_id: str | None = None,
-    single_file: bool = True,
     partition_by: list[str] | None = None,
 ) -> str:
     """Write ``<out_dir>/<run_id>_<name>`` as header'd CSV; returns the path.
@@ -35,13 +33,15 @@ def write_csv_report(
     ``partition_by`` gives one subdirectory per key value — the scale
     analog of the reference's one-CSV-per-search-term loop
     (legiscan_main.R:237): a single distributed write instead of N jobs.
+    Without it the report is coalesced to one CSV part.
     """
     run_id = run_id or new_run_id()
     path = f"{out_dir}/{run_id}_{name}"
-    out = df.coalesce(1) if single_file and partition_by is None else df
-    writer = out.write.option("header", True).mode("error")
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        writer = df.write.partitionBy(*partition_by)
+    else:
+        writer = df.coalesce(1).write
+    writer = writer.option("header", True).mode("error")
     writer.csv(path)
     return path
 
@@ -89,20 +89,15 @@ def upsert_partitions(
     with ``dedup_keep_latest`` inside each replaced partition, which is
     how the incremental-ingest pipeline uses it.
 
-    The session config is set per-write and restored, so callers'
+    The mode is a write option, not a session conf, so callers'
     sessions keep their (safer) ``static`` default.
     """
-    conf = spark.conf
-    prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            updates.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(base_path)
-        )
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        updates.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(base_path)
+    )
     return base_path
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 # events fixture shape (FIXTURES.md §B) — ts as timestamp here; the
 # parquet NANOS quirk is a batch-reader concern, streaming tests feed JSON
 EVENTS_SCHEMA = (
@@ -97,47 +99,30 @@ def dedup_within_watermark(
     )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _census_stream_confs(spark, shuffle_partitions: str = "8"):
-    """Scoped confs for a census's availableNow run.
-
-    - few shuffle partitions: stateful micro-batches pay per-partition
-      state-store snapshot/commit overhead EVERY trigger (measured
-      4.5-8.7 s/batch at 32 partitions for 25k-row batches — state
-      machinery, not data). A production deployment sizes this to state
-      volume, not the session's batch shuffle width.
-    - no-data micro-batches off: availableNow appends a final no-data
-      trigger whose only job is advancing the watermark past the last
-      batch; the censuses here either run effectively-unbounded
-      watermarks (nothing to finalize) or are complete-mode over
-      time-ordered files where the watermark is already data-maximal
-      after the last data batch, so the extra ~0.5 s trigger provably
-      changes no census row (verified rows-identical at sf0.001/0.1).
-
-    Measured negative result (r6): RocksDBStateStoreProvider ran the
-    parity/session censuses ~10% SLOWER (3.97/4.39 s vs 3.55/4.04 s,
-    min-of-2 at sf0.1) — native-store setup dominates at census-sized
-    state; RocksDB pays off when state exceeds executor heap, which a
-    production deployment opts into per stream, not globally.
-    """
-    prev = {
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.streaming.noDataMicroBatches.enabled": spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        ),
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+# Confs for a census's availableNow run (applied with session.scoped_conf).
+#
+# - few shuffle partitions: stateful micro-batches pay per-partition
+#   state-store snapshot/commit overhead EVERY trigger (measured
+#   4.5-8.7 s/batch at 32 partitions for 25k-row batches — state
+#   machinery, not data). A production deployment sizes this to state
+#   volume, not the session's batch shuffle width.
+# - no-data micro-batches off: availableNow appends a final no-data
+#   trigger whose only job is advancing the watermark past the last
+#   batch; the censuses here either run effectively-unbounded
+#   watermarks (nothing to finalize) or are complete-mode over
+#   time-ordered files where the watermark is already data-maximal
+#   after the last data batch, so the extra ~0.5 s trigger provably
+#   changes no census row (verified rows-identical at sf0.001/0.1).
+#
+# Measured negative result (r6): RocksDBStateStoreProvider ran the
+# parity/session censuses ~10% SLOWER (3.97/4.39 s vs 3.55/4.04 s,
+# min-of-2 at sf0.1) — native-store setup dominates at census-sized
+# state; RocksDB pays off when state exceeds executor heap, which a
+# production deployment opts into per stream, not globally.
+CENSUS_STREAM_CONFS = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
 
 
 def _run_parity_census(
@@ -212,7 +197,7 @@ def _run_parity_census(
             .load(json_dir)
         )
         landed_batch = spark.read.schema(landed_schema).json(json_dir)
-        with _census_stream_confs(spark):
+        with scoped_conf(spark, CENSUS_STREAM_CONFS):
             q = (
                 stream_builder(stream)
                 .writeStream.format("memory")
@@ -361,7 +346,7 @@ def dedup_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .load(json_dir)
         )
-        with _census_stream_confs(spark):
+        with scoped_conf(spark, CENSUS_STREAM_CONFS):
             q = (
                 dedup_within_watermark(
                     stream, ["event_id"], watermark="876000 hours"
@@ -458,9 +443,7 @@ def late_data_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg_cols = [F.window("ts", "1 hour").alias("window"), F.col("event_type")]
         # 8 shuffle partitions for the stateful run — same state-store
         # overhead reasoning as _run_parity_census
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
             q = (
                 stream.withWatermark("ts", "2 hours")
                 .groupBy(*agg_cols)
@@ -475,8 +458,6 @@ def late_data_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination(120)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         streamed = spark.table(name)
         batch = (
             spark.read.schema(landed_schema)

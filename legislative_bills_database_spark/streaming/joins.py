@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 def enrich_stream(
     events: DataFrame,
@@ -168,8 +170,8 @@ def outer_join_report(spark, sf_dir: str):
     Unlike the other censuses this one NEEDS availableNow's final
     no-data micro-batch (it advances the watermark past the last data
     batch and flushes expired left state — with it disabled the null
-    side is vacuously empty), so it sets its own scoped confs instead
-    of _census_stream_confs.
+    side is vacuously empty), so it scopes only the shuffle width, not
+    the whole of events.CENSUS_STREAM_CONFS.
 
     Returns ONE census row; all comparisons run distributed.
     """
@@ -242,9 +244,7 @@ def outer_join_report(spark, sf_dir: str):
         joined = ps.join(fs, cond, "left_outer").select(
             "p_id", "f_id", "p_user", "p_ts"
         )
-        prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
             q = (
                 joined.writeStream.format("memory")
                 .queryName(name)
@@ -253,8 +253,6 @@ def outer_join_report(spark, sf_dir: str):
                 .start()
             )
             q.awaitTermination(180)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         streamed = spark.table(name).localCheckpoint(eager=True)
         batch_ev = spark.read.schema(schema).json(json_dir)
         pb, fb = split(batch_ev)

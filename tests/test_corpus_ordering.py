@@ -121,6 +121,7 @@ def test_upsert_partitions_touches_only_updated_partition(spark, tmp_path):
     updates = spark.createDataFrame(
         [(3, "b", 333.0), (4, "b", 444.0)], "id int, p string, v double"
     )
+    confs = spark.conf.getAll
     upsert_partitions(spark, base, updates, ["p"])
 
     # partition a: identical files; partition b: replaced
@@ -130,7 +131,5 @@ def test_upsert_partitions_touches_only_updated_partition(spark, tmp_path):
         (r["id"], r["v"]) for r in spark.read.parquet(base).collect()
     )
     assert got == [(1, 10.0), (2, 20.0), (3, 333.0), (4, 444.0)]
-    # the static-overwrite default is restored afterwards
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-    )
+    # the session's confs are left as they were
+    assert spark.conf.getAll == confs

@@ -58,6 +58,7 @@ _SLOW_PARITY = {
     ],
 )
 def test_query_parity(spark, name):
+    confs = spark.conf.getAll
     df = QUERIES[name](spark, SF_DIR)
     if name in ORACLE:
         problems = compare(df, ORACLE[name], SF_DIR)
@@ -67,6 +68,8 @@ def test_query_parity(spark, name):
         n = df.count()
         assert n >= 0
         assert df.columns
+    # a query leaves the session's confs as it found them
+    assert spark.conf.getAll == confs, name
 
 
 @pytest.mark.slow  # r15 fast-lane: measured-heavy (see pytest.ini)

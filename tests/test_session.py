@@ -28,7 +28,13 @@ from pyspark.sql import functions as F
 from conftest import REPO, SF_DIR
 from legislative_bills_database_spark import session
 from legislative_bills_database_spark.plans import ORACLE, QUERIES
-from legislative_bills_database_spark.session import PACKAGE_PARENT, get_spark, memo
+from legislative_bills_database_spark.session import (
+    PACKAGE_PARENT,
+    SQL_DEFAULTS,
+    get_spark,
+    memo,
+    scoped_conf,
+)
 from tests.oracle_util import compare
 from legislative_bills_database_spark.worker_daemon import invalidate_caches
 
@@ -260,3 +266,41 @@ def test_memoized_queries_follow_a_rewritten_table(spark, tmp_path, name):
     even = table.filter(pc.equal(pc.bit_wise_and(table["l_orderkey"], 1), 0))
     pq.write_table(even, lineitem)
     assert compare(QUERIES[name](spark, str(sf_dir)), ORACLE[name], str(sf_dir)) == []
+
+
+UNSET_KEY = "spark.sql.optimizer.windowGroupLimitThreshold"
+SET_KEY = "spark.sql.shuffle.partitions"
+
+
+def test_session_carries_the_sql_defaults(spark):
+    assert {k: spark.conf.get(k) for k in SQL_DEFAULTS} == SQL_DEFAULTS
+
+
+def test_scoped_conf_restores_unset_and_set_keys(spark):
+    before = spark.conf.getAll
+    assert UNSET_KEY not in before and SET_KEY in before
+    with scoped_conf(spark, {UNSET_KEY: "-1", SET_KEY: "3"}):
+        assert spark.conf.get(UNSET_KEY) == "-1"
+        assert spark.conf.get(SET_KEY) == "3"
+    assert spark.conf.get(UNSET_KEY, None) is None
+    assert spark.conf.get(SET_KEY) == before[SET_KEY]
+    assert spark.conf.getAll == before
+
+
+def test_scoped_conf_restores_when_the_body_raises(spark):
+    before = spark.conf.getAll
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_conf(spark, {UNSET_KEY: "-1", SET_KEY: "3"}):
+            raise RuntimeError("boom")
+    assert spark.conf.getAll == before
+
+
+def test_scoped_conf_nests(spark):
+    before = spark.conf.getAll
+    with scoped_conf(spark, {UNSET_KEY: "1000", SET_KEY: "3"}):
+        with scoped_conf(spark, {UNSET_KEY: "-1", SET_KEY: "5"}):
+            assert spark.conf.get(UNSET_KEY) == "-1"
+            assert spark.conf.get(SET_KEY) == "5"
+        assert spark.conf.get(UNSET_KEY) == "1000"
+        assert spark.conf.get(SET_KEY) == "3"
+    assert spark.conf.getAll == before

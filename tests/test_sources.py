@@ -206,7 +206,7 @@ def test_write_csv_report_naming(spark, tmp_path):
     path = write_csv_report(df, str(tmp_path), "report", run_id="RID")
     assert path == f"{tmp_path}/RID_report"
     parts = glob.glob(f"{path}/part-*.csv")
-    assert len(parts) == 1  # single_file
+    assert len(parts) == 1  # coalesced without partition_by
     body = Path(parts[0]).read_text().splitlines()
     assert body[0] == "id,v" and len(body) == 4
 
