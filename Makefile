@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test preflight verify bench hooks round-gate leakgrep
+.PHONY: test preflight verify bench class-archive hooks round-gate leakgrep
 
 # full local test suite (includes tests/test_oracle_parity.py, which
 # sweeps ALL declared queries vs their DuckDB oracles at sf0.001 — the
@@ -20,6 +20,12 @@ verify: test preflight
 
 bench:
 	$(PY) bench.py
+
+# build the driver JVM's class-data archive if it is missing (one
+# training pass), then print its key, path, size and whether a fresh JVM
+# maps it; run before paired benchmark runs
+class-archive:
+	$(PY) -m legislative_bills_database_spark.jvm_archive
 
 # grep for anything that must never ship (internal hosts/buckets/env
 # vars); exits non-zero on a hit. api.legiscan.com is the public API the

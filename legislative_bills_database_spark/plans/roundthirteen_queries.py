@@ -126,8 +126,14 @@ def q_multiterm_folded(spark, sf_dir):
     """The SAME 1000-term search as q_multiterm_scale in the
     reference's own folded-OR shape (legiscan_search_all_bills.R:88-93
     scaled up) — the head-to-head baseline bench.py times against the
-    AC pass every round. One F.expr parse (not 1000 Column calls);
-    Catalyst folds it into a single codegen'd predicate at the scan."""
+    AC pass every round. One F.expr parse (not 1000 Column calls)
+    gives one 1000-way OR predicate at the scan. Whole-stage codegen
+    cannot hold it: at sf0.01 Janino fails every execution with "Code
+    grows beyond 64 KB" for ``processNext()``, and
+    ``WholeStageCodegenExec`` falls back to the non-whole-stage plan
+    for that stage. The failed compile plus the non-whole-stage run are
+    part of the baseline that bench.py weighs against Aho-Corasick; the
+    plan stays as it is because it is the reference's shape."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.filter(F.expr(_MT_FOLDED_PRED)).select("doc_id")
 

@@ -1,5 +1,6 @@
 """The session factory's JIT profile reaches the driver JVM, and a
-caller's ``extraJavaOptions`` still win over it; its Python UDFs run in
+caller's ``extraJavaOptions`` still win over it; the session carries the
+codegen cache size; its Python UDFs run in
 one pool forked from the package's worker daemon, which re-reads a zip
 archive's directory only when the archive changed. The session memo
 returns the stored object on a hit, rebuilds (and releases) an entry
@@ -29,6 +30,7 @@ from conftest import REPO, SF_DIR
 from legislative_bills_database_spark import session
 from legislative_bills_database_spark.plans import ORACLE, QUERIES
 from legislative_bills_database_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
     PACKAGE_PARENT,
     SQL_DEFAULTS,
     get_spark,
@@ -274,6 +276,10 @@ SET_KEY = "spark.sql.shuffle.partitions"
 
 def test_session_carries_the_sql_defaults(spark):
     assert {k: spark.conf.get(k) for k in SQL_DEFAULTS} == SQL_DEFAULTS
+
+
+def test_session_carries_the_codegen_cache_size(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == CODEGEN_CACHE_ENTRIES == "1000"
 
 
 def test_scoped_conf_restores_unset_and_set_keys(spark):
