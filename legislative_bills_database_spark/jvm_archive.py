@@ -458,7 +458,7 @@ def train(part: str) -> None:
     with tempfile.TemporaryDirectory(prefix="lbe-train-") as tmp:
         os.chdir(tmp)
         data_root, pdf_dir, transport = _training_tree(Path(tmp))
-        java_options = f"{session.JIT_PROFILE} {TRAIN_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={part}"
+        java_options = f"{session.JIT_PROFILE}{session.JVM_LOCALE} {TRAIN_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={part}"
         spark = session.session_builder("legislative-bills-engine-train", 2, None, java_options).getOrCreate()
         session.add_worker_path(spark)
         proc = SparkContext._gateway.proc

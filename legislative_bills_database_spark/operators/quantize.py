@@ -153,27 +153,3 @@ def pq_adc_topk(
         .filter(F.col("rank") <= k)
         .select("qid", "nid", F.round(F.col("score"), 3).alias("score"), "rank")
     )
-
-
-def pq_recall(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks: np.ndarray,
-    k: int = 5,
-) -> float:
-    """Fraction of exact top-k cosine pairs recovered by ADC over the
-    PQ codes (bounded inputs — the exact side is brute force)."""
-    from .similarity import cosine_topk
-
-    exact = cosine_topk(vectors, queries, id_col, vec_col, k=k).select(
-        "qid", "nid"
-    )
-    codes = pq_encode(vectors, id_col, vec_col, codebooks)
-    approx = pq_adc_topk(
-        codes, queries, id_col, vec_col, codebooks, k=k
-    ).select("qid", "nid")
-    n_exact = exact.count()
-    n_hit = exact.join(approx, ["qid", "nid"], "left_semi").count()
-    return n_hit / n_exact if n_exact else 1.0

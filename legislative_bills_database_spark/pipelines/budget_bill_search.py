@@ -149,10 +149,17 @@ def search_html_reports(html_docs: DataFrame, terms: list[str]) -> DataFrame:
     Returns one row per (term, matched bill): term, Bill, fiscal_year,
     type, item, amount, link, also_appears_in — the reference's report
     frame; blank audit columns preserved (:222-226).
+
+    Each text is lowercased once, in ``base``, and each term once, in
+    the broadcast table, so the join condition compares lowercased
+    strings instead of lowercasing a whole text per (text, term) pair.
+    The report keeps the term as given.
     """
     spark = html_docs.sparkSession
     terms_df = F.broadcast(
-        spark.createDataFrame([(t,) for t in terms], "term string")
+        spark.createDataFrame([(t,) for t in terms], "term string").withColumn(
+            "term_lc", F.lower("term")
+        )
     )
     base = html_docs.select(
         F.regexp_extract(F.col("path"), r"(20[0-9]{2})_[A-Z0-9]+\.html$", 1)
@@ -163,11 +170,9 @@ def search_html_reports(html_docs: DataFrame, terms: list[str]) -> DataFrame:
             F.lit(" "),
             F.regexp_extract(F.col("path"), r"20[0-9]{2}_[A-Z]+([0-9]+)\.html$", 1),
         ).alias("Bill"),
-        "text",
+        F.lower("text").alias("text_lc"),
     )
-    matched = base.crossJoin(terms_df).filter(
-        F.lower(F.col("text")).contains(F.lower(F.col("term")))
-    )
+    matched = base.join(terms_df, F.col("text_lc").contains(F.col("term_lc")))
     fiscal = session_label_for_year(F.col("year"))
     link = F.regexp_replace(
         F.concat(F.lit(LEGINFO_PREFIX), fiscal, F.lit("0"), F.col("Bill")),

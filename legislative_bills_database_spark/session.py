@@ -41,6 +41,26 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   only when this factory launches the JVM: a context restart in a live
   JVM, the session handed to ``__spark_entry__.entry`` and a session
   given to ``tune_session`` get no archive.
+- ``lower``/``upper`` without ICU (``spark.sql.icu.caseMappings.enabled``
+  off). With Spark 4.1's default (on), the first ``lower()`` in a JVM
+  initialises ``CollationAwareUTF8String``, whose static initialiser
+  calls ICU's ``toTitleCase`` on all 1,114,112 code points to build a
+  title-case table that ``lower`` and ``upper`` never read. A JVM with
+  the JIT profile that loads only that class uses 3.9-4.6 CPU-s (2.0-2.3
+  s wall), one that loads only ``UTF8String`` 0.4-0.5, and turning the
+  conf off cut the peak RSS of the benchmark's cold ingest pass (1 GB heap)
+  by 11-14%. Off, ``UTF8String`` maps ASCII itself and anything else
+  through ``java.lang.String``. Over the 1,112,064 non-surrogate code
+  points the two mappers differ on 134 Unicode 14-16 letters that JDK 17
+  does not know (e.g. U+2C2F, U+A7C0, U+019B); on each of them the JVM
+  mapper gives DuckDB's ``lower``/``upper`` and ICU does not. Both
+  mappers case-map a non-ASCII string in the JVM's default locale (under
+  tr-TR either one lowercases its ``I`` to a dotless ``ı``), so the
+  driver JVM gets ``-Duser.language=en -Duser.country=US``
+  (``JVM_LOCALE``) next to the JIT profile. Like the JIT profile, the
+  pin applies only when this factory launches the JVM; a session built
+  elsewhere (``__spark_entry__.entry``, ``tune_session``) gets the conf
+  but keeps its own JVM's locale.
 - A codegen cache of ``CODEGEN_CACHE_ENTRIES`` (1000) generated classes
   (``spark.sql.codegen.cache.maxEntries``, a static conf): at Spark's
   default of 100 the operator mix's first warm pass compiled 20-21 of
@@ -124,6 +144,9 @@ JIT_PROFILE = (
     " -XX:Tier4CompileThreshold=150000"
     " -XX:Tier4BackEdgeThreshold=400000"
 )
+# the driver JVM's default locale, which lower/upper of non-ASCII text
+# uses without ICU (see the module docstring)
+JVM_LOCALE = " -Duser.language=en -Duser.country=US"
 # runtime SQL defaults of get_spark and tune_session (see the module docstring)
 SQL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -141,6 +164,8 @@ SQL_DEFAULTS = {
     # fixture events.ts is parquet TIMESTAMP(NANOS) — illegal for Spark's
     # reader; read as long nanos, io.load_table converts to µs timestamps
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # lower/upper through UTF8String, not ICU's case mapper
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 # get_spark's shuffle width unless the caller passes shuffle_partitions
 SHUFFLE_PARTITIONS = 32
@@ -185,10 +210,11 @@ def get_spark(
 ) -> SparkSession:
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
     if SparkContext._gateway is not None:  # a restart in the live JVM
-        spark = session_builder(app_name, cpus, shuffle_partitions, JIT_PROFILE).getOrCreate()
+        spark = session_builder(app_name, cpus, shuffle_partitions, JIT_PROFILE + JVM_LOCALE).getOrCreate()
     else:
         plan = jvm_archive.plan()
-        builder = session_builder(app_name, cpus, shuffle_partitions, JIT_PROFILE + plan.java_options)
+        java_options = JIT_PROFILE + JVM_LOCALE + plan.java_options
+        builder = session_builder(app_name, cpus, shuffle_partitions, java_options)
         with jvm_archive.launch_env(plan):
             spark = builder.getOrCreate()
         jvm_archive.check_mapped(spark.sparkContext._gateway.proc.pid, plan)

@@ -132,6 +132,10 @@ def _read_json(
     file, and past 32 files every read would launch a listing job with
     one task per file.
 
+    A malformed file fails the read (``mode=FAILFAST``) with an error
+    that names it; Spark's default would read it as a row of NULLs that
+    drops out of every count and report without a trace.
+
     input_file_name() yields URL-encoded URIs ('%20' for the spaces in
     session titles) — decode before extracting."""
     if sessions is None:
@@ -141,6 +145,7 @@ def _read_json(
     df = (
         spark.read.schema(schema)
         .option("multiLine", True)
+        .option("mode", "FAILFAST")
         .option("pathGlobFilter", "*.json")
         .json(roots)
     )

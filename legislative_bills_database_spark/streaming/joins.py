@@ -1,21 +1,14 @@
-"""Streaming joins: stream-static enrichment and stream-stream
-correlation with watermark-bounded state.
+"""Streaming joins: stream-stream correlation with watermark-bounded
+state.
 
-The two join shapes every event pipeline needs beyond windowed
-aggregation (events.py):
-
-- **stream-static**: enrich each micro-batch against a slow dimension
-  (user → segment, document → source metadata). The static side is
-  re-planned per micro-batch, so a dimension refresh is picked up
-  without restarting the query; small dims broadcast exactly as in
-  batch.
-- **stream-stream**: correlate two live streams (click ↔ conversion,
-  request ↔ response). Spark buffers BOTH sides in state until the
-  watermark says a match can no longer arrive; an explicit time-range
-  predicate is what lets the engine EVICT — an equi-join alone would
-  grow state forever. State size ≈ rate × join-window, independent of
-  stream lifetime: the property that makes this run for months at
-  100 TB/day.
+Correlating two live streams (click ↔ conversion, request ↔ response) is
+the join shape every event pipeline needs beyond windowed aggregation
+(events.py); a stream-static lookup is a plain ``events.join(dim, key)``
+and needs no helper. Spark buffers BOTH sides in state until the
+watermark says a match can no longer arrive; an explicit time-range
+predicate is what lets the engine EVICT — an equi-join alone would grow
+state forever. State size ≈ rate × join-window, independent of stream
+lifetime: the property that makes this run for months at 100 TB/day.
 """
 
 from __future__ import annotations
@@ -24,17 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import scoped_conf
-
-
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static join: per-micro-batch lookup against a batch
-    dimension (broadcast when small — same planner rules as batch)."""
-    return events.join(dim, key, how)
 
 
 def correlate_streams(

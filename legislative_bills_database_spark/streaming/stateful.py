@@ -95,49 +95,3 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-
-
-KEY_COUNT_SCHEMA = "key string, n long"
-_COUNT_STATE_SCHEMA = "n long"
-
-
-def _update_key_counts(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterable[pd.DataFrame]:
-    (k,) = key
-    (n,) = state.get if state.exists else (0,)
-    for pdf in pdfs:
-        n += len(pdf)
-    state.update((n,))
-    yield pd.DataFrame({"key": [k], "n": [n]})
-
-
-def running_key_counts(events: DataFrame, key_col: str = "event_type") -> DataFrame:
-    """Running per-key frequency maintained across micro-batches — the
-    streaming half of the heavy-hitter audit (operators/profile.
-    heavy_hitters is the batch twin): the update stream lands in any
-    sink keyed by ``key``, and "current top-k" is a k-row read of the
-    latest counts at query time, never a rescan of the stream history.
-
-    State is ONE long per key. For a key space too large even for that
-    (per-URL counts at web scale), the documented refinement is
-    space-saving/Misra-Gries inside each state group — cap tracked keys
-    per group at m and decrement-evict, giving frequency error ≤ N/m;
-    exact per-key state is the right default for the bounded key spaces
-    this feeds (event types, sources, languages).
-
-    Batch==stream agreement is pinned in tests/test_streaming.py.
-    """
-    return (
-        events.select(F.col(key_col).cast("string").alias("key"))
-        .groupBy("key")
-        .applyInPandasWithState(
-            _update_key_counts,
-            outputStructType=KEY_COUNT_SCHEMA,
-            stateStructType=_COUNT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

@@ -23,6 +23,8 @@ from legislative_bills_database_spark.pipelines import (
     budget_bills_with_data,
     chaptered_doc_ids,
     legislator_bill_counts,
+    run_legislator_bill_counts,
+    run_search_all_bills,
     search_all_bills,
     search_html_reports,
 )
@@ -333,11 +335,36 @@ def test_search_html_reports(spark):
         ],
         "path string, text string",
     )
-    out = search_html_reports(html_docs, ["housing affordability", "transit"])
-    rows = out.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["term"] == "housing affordability"  # case-insensitive match
-    assert r["Bill"] == "AB 128"
-    assert r["fiscal_year"] == "2021-2022"
-    assert r["link"].endswith("bill_id=202120220AB128")
+    terms = ["housing affordability", "Housing AFFORDABILITY", "transit"]
+    rows = sorted(search_html_reports(html_docs, terms).collect())
+    # case-insensitive match; each report row keeps its term as given
+    assert [r["term"] for r in rows] == ["Housing AFFORDABILITY", "housing affordability"]
+    for r in rows:
+        assert r["Bill"] == "AB 128"
+        assert r["fiscal_year"] == "2021-2022"
+        assert r["link"].endswith("bill_id=202120220AB128")
+
+
+def test_truncated_bill_file_fails_the_read(spark, tmp_path):
+    """A truncated bill file raises, naming the file, in the reader and
+    in both pipelines that read the tree; it is never a row of NULLs
+    that drops out of the counts and reports."""
+    data = tmp_path / "data"
+    _write(data, S23, "people", "101", _person(101, "Sen", "Alice", "SD-03"))
+    _write(data, S23, "bill", "AB1", _bill(
+        "AB1", "B", 4, [(101, 1)], [], desc="housing", session_name=S23))
+    _write(data, S23, "bill", "AB2", _bill(
+        "AB2", "B", 4, [(101, 1)], [], desc="housing", session_name=S23))
+    bad = Path(session_dir(str(data), S23, "bill")) / "AB2.json"
+    bad.write_text(bad.read_text()[:40])
+    runs = [
+        lambda: read_bills(spark, str(data)).collect(),
+        lambda: run_legislator_bill_counts(spark, str(data), str(tmp_path / "out"), run_id="T"),
+        lambda: run_search_all_bills(
+            spark, str(data), str(tmp_path / "out"), ["housing"], [2023], run_id="T"
+        ),
+    ]
+    for run in runs:
+        with pytest.raises(Exception, match="FAILED_READ_FILE") as err:
+            run()
+        assert "AB2.json" in str(err.value)

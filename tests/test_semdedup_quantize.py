@@ -2,8 +2,8 @@
 
 SemDeDup must agree with a per-cluster brute-force reference and honor
 its invariants (drops witnessed by a lower id in the same cluster, no
-cross-cluster drops). PQ must round-trip codes with bounded error, beat
-a broken codebook on recall, and rank close to exact cosine.
+cross-cluster drops). PQ must round-trip codes with bounded error and
+rank close to exact cosine.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from legislative_bills_database_spark.operators.quantize import (
     pq_adc_topk,
     pq_codebooks,
     pq_encode,
-    pq_recall,
 )
 from legislative_bills_database_spark.operators.semdedup import (
     semdedup,
@@ -117,16 +116,3 @@ def test_pq_adc_scores_approximate_cosine(spark):
         q, n = vecs[r["qid"]], vecs[r["nid"]]
         exact = float(q @ n / (np.linalg.norm(q) * np.linalg.norm(n)))
         assert abs(r["score"] - exact) < 0.25  # quantized, but in the ballpark
-
-
-def test_pq_recall_beats_shuffled_codebooks(spark):
-    emb = _emb(spark)
-    queries = emb.filter(F.col("vec_id") < 10)
-    books = pq_codebooks(emb, "embedding", m=16, k=128)
-    r = pq_recall(emb, queries, "vec_id", "embedding", books, k=5)
-    assert r >= 0.6  # 16×7-bit codes on 64-dim random-ish fixture vectors
-
-    rng = np.random.default_rng(0)
-    broken = rng.normal(size=books.shape)  # codebooks that fit nothing
-    r_broken = pq_recall(emb, queries, "vec_id", "embedding", broken, k=5)
-    assert r > r_broken

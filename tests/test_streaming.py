@@ -133,29 +133,6 @@ def test_session_window_agrees_with_batch_sessionize(spark, events_json_dir):
     assert _canon(got, cols) == _canon(expected, cols)
 
 
-def test_stream_static_enrichment_matches_batch(spark, events_json_dir):
-    from legislative_bills_database_spark.streaming.joins import enrich_stream
-
-    dim = spark.createDataFrame(
-        [("click", "engage"), ("view", "passive"), ("purchase", "convert")],
-        "event_type string, kind string",
-    )
-    stream = stream_events_from_files(spark, events_json_dir)
-    got = _run_available_now(
-        enrich_stream(stream, dim, "event_type").select(
-            "event_id", "event_type", "kind"
-        ),
-        "t_enrich",
-        "append",
-    )
-    batch = load_table(spark, SF_DIR, "events").join(
-        dim, "event_type", "left"
-    )
-    assert _canon(got, ["event_id", "kind"]) == _canon(
-        batch, ["event_id", "kind"]
-    )
-
-
 def test_stream_stream_join_matches_batch_range_join(spark, events_json_dir):
     from legislative_bills_database_spark.streaming.joins import (
         correlate_streams,
@@ -253,40 +230,6 @@ def test_stream_parity_report_census(spark):
     assert row.equal is True
     assert row.n_mismatch == 0
     assert row.n_batch == row.n_stream > 0
-
-
-def test_running_key_counts_stream_equals_batch(spark, events_json_dir):
-    """Stateful per-key counts: the LATEST update per key after an
-    availableNow run equals the batch groupBy count, and the top-3 from
-    those counts equals the batch heavy-hitter audit."""
-    from legislative_bills_database_spark.operators.profile import (
-        heavy_hitters,
-    )
-    from legislative_bills_database_spark.streaming.stateful import (
-        running_key_counts,
-    )
-
-    stream = stream_events_from_files(spark, events_json_dir)
-    got = _run_available_now(
-        running_key_counts(stream), "t_key_counts", "update"
-    )
-    # update mode may emit a key several times (once per batch touching
-    # it); the LAST emit per key carries the running total
-    latest = {}
-    for r in got.collect():
-        latest[r.key] = r.n  # memory sink appends in batch order
-    batch = load_table(spark, SF_DIR, "events")
-    want = {
-        r.event_type: r.n
-        for r in batch.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    assert latest == want
-    top3 = sorted(latest.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
-    hh = [
-        (r.key, r.n)
-        for r in heavy_hitters(batch, "event_type", k=3).collect()
-    ]
-    assert hh == top3
 
 
 def test_session_parity_report_equal(spark):
