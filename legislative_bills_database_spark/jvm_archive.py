@@ -13,7 +13,8 @@ it at launch instead of loading them from the jars.
   ``release`` file, the launch class path as Spark's launcher builds it
   (conf directory, ``slf4j-api``, ``jars/*``, ``HADOOP_CONF_DIR``,
   ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH``), the name, size and mtime
-  of every jar and the training JVM's flags, so a new JDK, Spark, jar or
+  of every jar and the training JVM's flags (``session.DRIVER_JAVA_OPTIONS``
+  and ``TRAIN_JAVA_OPTIONS``), so a new JDK, Spark, jar, driver JVM flag or
   training recipe gets an archive of its own. If the directory is not writable the JVM runs without an archive
   (one warning).
 - Build: the first ``get_spark`` that launches a JVM and finds no archive
@@ -145,6 +146,8 @@ def archive_key(java: str, spark_home: str, class_path: str) -> str:
     launch class path (see the module docstring)."""
     import pyspark
 
+    from . import session
+
     real = os.path.realpath(java)
     release = _java_release(java)
     version = next(
@@ -154,7 +157,7 @@ def archive_key(java: str, spark_home: str, class_path: str) -> str:
     h = hashlib.sha256()
     st = os.stat(real) if os.path.exists(real) else None
     h.update(repr((real, st and (st.st_size, st.st_mtime_ns), release, pyspark.__version__,
-                   TRAIN_JAVA_OPTIONS)).encode())
+                   session.DRIVER_JAVA_OPTIONS, TRAIN_JAVA_OPTIONS)).encode())
     h.update(class_path.encode())
     for entry in class_path.split(os.pathsep):
         if entry.endswith("/*"):
@@ -458,7 +461,7 @@ def train(part: str) -> None:
     with tempfile.TemporaryDirectory(prefix="lbe-train-") as tmp:
         os.chdir(tmp)
         data_root, pdf_dir, transport = _training_tree(Path(tmp))
-        java_options = f"{session.JIT_PROFILE}{session.JVM_LOCALE} {TRAIN_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={part}"
+        java_options = f"{session.driver_java_options()} {TRAIN_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={part}"
         spark = session.session_builder("legislative-bills-engine-train", 2, None, java_options).getOrCreate()
         session.add_worker_path(spark)
         proc = SparkContext._gateway.proc

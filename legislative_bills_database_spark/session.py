@@ -61,6 +61,50 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   pin applies only when this factory launches the JVM; a session built
   elsewhere (``__spark_entry__.entry``, ``tune_session``) gets the conf
   but keeps its own JVM's locale.
+- The throughput collector for a small driver heap (``COLLECTOR``):
+  ``-XX:+UseParallelGC`` when the heap ``get_spark`` asks for
+  (``SPARK_GRAFT_DRIVER_MEM``, default ``DRIVER_MEMORY``, 8g) is at most
+  ``PARALLEL_GC_MAX_HEAP_MB`` (2 GB), as for the benchmark's 1 GB
+  batch passes; a larger heap keeps G1, the JDK's default. On G1, a JVM
+  with a fixed heap (``-Xms`` equal to ``-Xmx``, as the benchmark's
+  driver runs) grows its young generation to most of the heap, so a
+  short pass touches nearly every heap page before its first
+  collection, and those pages were most of its peak RSS. ParallelGC
+  keeps the young generation at a third of the heap, and its write
+  barrier is a plain card mark, so the JIT compiles less barrier code.
+  In a GC-logged ``operator_mix`` run on the 1 GB heap, G1 let the heap
+  fill to 991 MB before a collection and ParallelGC to 483 MB. Over ten
+  paired benchmark runs per seed set (4 vCPUs) the peak RSS of
+  ``operator_mix`` fell from about 1.76 GB to 1.24 GB (29-30%) and that
+  of the ingest pass from about 1.33 GB to 0.96 GB (28%), while the
+  cold passes used 5-9% less busy CPU. The heap limit: long queries on a
+  large heap keep gigabytes live (cached blocks, broadcast and
+  aggregation state), and ParallelGC copies and compacts all of it in
+  stop-the-world pauses where G1 marks concurrently. With the default
+  8 GB heap, ``scripts/solo_measure.py`` over five long sf0.1 queries
+  paused 12.8-18.0 s on ParallelGC (10-11 ``Pause Full (Ergonomics)``
+  while the heap grew to hold up to 2.6 GB live) against 2.3-2.5 s on
+  G1, and in two of three alternating series the minimum of
+  ``q_matrix_profile`` or ``q_betweenness_sample`` was 29-37% above the
+  slower G1 series' minimum; at 2 GB the pauses were 8.5-9.3 s against
+  2.5-2.7 s, and every minimum stayed within 15% of G1's.
+  The metaspace threshold (``-XX:MetaspaceSize=256m``, under either
+  collector): without it ParallelGC runs a stop-the-world
+  ``Pause Full (Metadata GC Threshold)`` each time class metadata crosses
+  its high-water mark, which starts at about 21 MB; an ``operator_mix``
+  run paid two such pauses. A cold pass commits far less than 256 MB of
+  metaspace (archived classes do not count), so it runs no
+  metadata-triggered collection. A caller's collector wins: HotSpot
+  refuses to start with two collectors selected (``Multiple garbage
+  collectors selected``), so when ``PYSPARK_SUBMIT_ARGS``,
+  ``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS`` or the Spark conf
+  directory's ``spark-defaults.conf`` names one (``-XX:[+-]Use...GC``),
+  ``driver_java_options`` leaves out ``COLLECTOR`` and keeps the rest.
+  Like the JIT profile it applies only when this factory launches the
+  JVM: a session built elsewhere keeps its own collector.
+- The driver JVM's flags above are one string, ``DRIVER_JAVA_OPTIONS``:
+  the launch and the class-data archive's training pass use it, and the
+  archive key hashes it, so a changed flag gets an archive of its own.
 - A codegen cache of ``CODEGEN_CACHE_ENTRIES`` (1000) generated classes
   (``spark.sql.codegen.cache.maxEntries``, a static conf): at Spark's
   default of 100 the operator mix's first warm pass compiled 20-21 of
@@ -126,6 +170,7 @@ and IVF centroids, PQ codebooks, similarity chains).
 from __future__ import annotations
 
 import os
+import re
 import threading
 from contextlib import contextmanager
 
@@ -146,7 +191,21 @@ JIT_PROFILE = (
 )
 # the driver JVM's default locale, which lower/upper of non-ASCII text
 # uses without ICU (see the module docstring)
-JVM_LOCALE = " -Duser.language=en -Duser.country=US"
+JVM_LOCALE = "-Duser.language=en -Duser.country=US"
+# the throughput collector, for a driver heap of at most
+# PARALLEL_GC_MAX_HEAP_MB; a larger heap keeps the JDK's G1 (see the
+# module docstring)
+COLLECTOR = "-XX:+UseParallelGC"
+PARALLEL_GC_MAX_HEAP_MB = 2048
+# the driver heap get_spark asks for
+DRIVER_MEMORY = "8g"
+# the flags of every driver JVM get_spark launches (besides its archive)
+# and of the class-data archive's training JVM; the metaspace GC threshold
+# lies above a cold pass's metaspace (see the module docstring)
+DRIVER_JAVA_OPTIONS = f"{JIT_PROFILE} {JVM_LOCALE} {COLLECTOR} -XX:MetaspaceSize=256m"
+# a caller's flag that selects (or deselects) a collector; HotSpot refuses
+# to start with two collectors selected
+_COLLECTOR_FLAG = re.compile(r"-XX:[+-]Use(?:Serial|Parallel|ParallelOld|G1|Z|Shenandoah|Epsilon|ConcMarkSweep)GC\b")
 # runtime SQL defaults of get_spark and tune_session (see the module docstring)
 SQL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -187,12 +246,51 @@ def session_builder(app_name: str, cpus, shuffle_partitions: int | None, java_op
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or SHUFFLE_PARTITIONS))
         .config("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.driver.defaultJavaOptions", java_options)
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "legislative_bills_database_spark.worker_daemon")
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
     )
+
+
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else ``DRIVER_MEMORY``."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEMORY)
+
+
+def heap_mb(size: str) -> float:
+    """A JVM memory size (``1g``, ``1536m``, ``2048``) in MiB; a bare
+    number is MiB, as in ``spark.driver.memory``."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {size!r}")
+    return int(m[1]) * {"k": 1 / 1024, "": 1, "m": 1, "g": 1024, "t": 1024**2}[m[2]]
+
+
+def _caller_names_a_collector() -> bool:
+    """Whether ``PYSPARK_SUBMIT_ARGS``, ``JAVA_TOOL_OPTIONS``,
+    ``JDK_JAVA_OPTIONS`` or the Spark conf directory's
+    ``spark-defaults.conf`` selects a collector."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    caller = [os.environ.get(v, "") for v in ("PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS")]
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf, "spark-defaults.conf")) as f:
+            caller.append(f.read())
+    except OSError:
+        pass
+    return any(_COLLECTOR_FLAG.search(v) for v in caller)
+
+
+def driver_java_options() -> str:
+    """``DRIVER_JAVA_OPTIONS`` without ``COLLECTOR`` when the driver heap
+    is larger than ``PARALLEL_GC_MAX_HEAP_MB`` (the JVM keeps G1) or when
+    the caller names a collector (the caller's collector wins)."""
+    if heap_mb(driver_memory()) > PARALLEL_GC_MAX_HEAP_MB or _caller_names_a_collector():
+        return DRIVER_JAVA_OPTIONS.replace(f" {COLLECTOR}", "")
+    return DRIVER_JAVA_OPTIONS
 
 
 def add_worker_path(spark: SparkSession) -> None:
@@ -210,10 +308,10 @@ def get_spark(
 ) -> SparkSession:
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
     if SparkContext._gateway is not None:  # a restart in the live JVM
-        spark = session_builder(app_name, cpus, shuffle_partitions, JIT_PROFILE + JVM_LOCALE).getOrCreate()
+        spark = session_builder(app_name, cpus, shuffle_partitions, driver_java_options()).getOrCreate()
     else:
         plan = jvm_archive.plan()
-        java_options = JIT_PROFILE + JVM_LOCALE + plan.java_options
+        java_options = driver_java_options() + plan.java_options
         builder = session_builder(app_name, cpus, shuffle_partitions, java_options)
         with jvm_archive.launch_env(plan):
             spark = builder.getOrCreate()

@@ -13,10 +13,13 @@ Decoders available in this container:
 - PDF: ``pypdf`` when importable; otherwise a minimal built-in extractor
   for standard uncompressed-or-Flate text streams (zlib + Tj/TJ operator
   scan) — sufficient for simple text PDFs and the test fixtures, clearly
-  the fallback path. Neither raises on a PDF without extractable text:
-  ``pdf_to_text`` returns an empty string and ``read_pdf_lines`` one
-  empty line for that file. Failing loudly or counting such files is
-  open work (ROADMAP item 3, bad input).
+  the fallback path.
+
+Bad input fails loudly and names its file (ROADMAP item 3): a PDF that
+yields no text at all (only whitespace, e.g. a scanned page) fails
+``read_pdf_lines`` instead of reading as one empty line, and a file that
+is not valid UTF-8 fails ``read_html_docs``. ``pdf_to_text`` itself
+returns an empty string for such a PDF.
 """
 
 from __future__ import annotations
@@ -88,10 +91,14 @@ def with_html_text(df: DataFrame, html_col: str, out_col: str = "text") -> DataF
 
 
 def read_html_docs(spark: SparkSession, path_glob: str) -> DataFrame:
-    """binaryFile scan + extraction → (path, text)."""
+    """binaryFile scan + extraction → (path, text); a file that is not
+    valid UTF-8 raises an error naming it."""
     raw = spark.read.format("binaryFile").load(path_glob)
     decoded = raw.select(
-        F.col("path"), F.decode(F.col("content"), "utf-8").alias("html")
+        F.col("path"),
+        F.when(F.is_valid_utf8("content"), F.decode("content", "utf-8"))
+        .otherwise(F.raise_error(F.concat(F.col("path"), F.lit(": not valid UTF-8"))))
+        .alias("html"),
     )
     return with_html_text(decoded, "html").select("path", "text")
 
@@ -183,14 +190,21 @@ def pdf_to_text(payload: bytes) -> str:
 def read_pdf_lines(spark: SparkSession, path_glob: str) -> DataFrame:
     """binaryFile scan → extraction → line explode: (path, line), leading
     spaces stripped — pdf_text |> strsplit('\\n') |> gsub('^ +','',...)
-    (legiscan_main.R:84-87) as one mapInPandas + explode."""
+    (legiscan_main.R:84-87) as one mapInPandas + explode. A PDF that
+    yields no text raises an error naming it."""
+
+    def to_text(path: str, payload) -> str:
+        text = pdf_to_text(bytes(payload))
+        if not text.strip():
+            raise ValueError(f"{path}: the PDF yields no text")
+        return text
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "path": pdf["path"],
-                    "text": [pdf_to_text(bytes(p)) for p in pdf["content"]],
+                    "text": [to_text(path, p) for path, p in zip(pdf["path"], pdf["content"])],
                 }
             )
 

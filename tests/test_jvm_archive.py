@@ -138,6 +138,15 @@ def test_key_changes_when_the_jar_listing_changes(tmp_path, monkeypatch):
     assert len(set(keys)) == len(keys)
 
 
+def test_key_changes_with_the_driver_jvm_flags(tmp_path, monkeypatch):
+    from legislative_bills_database_spark import session
+
+    cp = launch_class_path(str(tmp_path), str(tmp_path / "conf"))
+    key = archive_key(JAVA, str(tmp_path), cp)
+    monkeypatch.setattr(session, "DRIVER_JAVA_OPTIONS", session.DRIVER_JAVA_OPTIONS + " -XX:+UseSerialGC")
+    assert archive_key(JAVA, str(tmp_path), cp) != key
+
+
 @pytest.fixture
 def no_build(monkeypatch, tmp_path):
     """A cache under tmp_path and a build that only records its env."""

@@ -1,5 +1,6 @@
-"""The session factory's JIT profile reaches the driver JVM, and a
-caller's ``extraJavaOptions`` still win over it; the session carries the
+"""The session factory's JIT profile and collector reach the driver JVM,
+and a caller's ``extraJavaOptions`` (a collector among them) still win
+over them; the session carries the
 codegen cache size; its Python UDFs run in
 one pool forked from the package's worker daemon, which re-reads a zip
 archive's directory only when the archive changed. The session memo
@@ -57,8 +58,54 @@ def vm_options(spark, names):
     return {n: bean.getVMOption(n).getValue() for n in names}
 
 
+def gc_flags(parallel: bool) -> dict:
+    """The collector flags of a driver JVM on ParallelGC or on G1, with
+    the metaspace GC threshold (256 MB) either way."""
+    return {"UseParallelGC": str(parallel).lower(), "UseG1GC": str(not parallel).lower(),
+            "MetaspaceSize": "268435456"}
+
+
 def test_jit_profile_reaches_driver_jvm(spark):
-    assert vm_options(spark, FLAGS) == FLAGS
+    # the fixture's heap is the default 8g unless SPARK_GRAFT_DRIVER_MEM says otherwise
+    parallel = session.heap_mb(session.driver_memory()) <= session.PARALLEL_GC_MAX_HEAP_MB
+    want = {**FLAGS, **gc_flags(parallel)}
+    assert vm_options(spark, want) == want
+
+
+@pytest.mark.parametrize(("size", "parallel"), [
+    ("1g", True), ("2048m", True), ("2048", True), ("2049m", False), ("8g", False),
+])
+def test_parallel_gc_only_up_to_a_2g_heap(monkeypatch, tmp_path, size, parallel):
+    for v in ("PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"):
+        monkeypatch.delenv(v, raising=False)
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", size)
+    opts = session.driver_java_options()
+    assert (session.COLLECTOR in opts) == parallel
+    assert "-XX:MetaspaceSize=256m" in opts
+
+
+@pytest.mark.parametrize("var", ["PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "spark-defaults.conf"])
+def test_a_caller_collector_replaces_the_profile_collector(monkeypatch, tmp_path, var):
+    for v in ("PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"):
+        monkeypatch.delenv(v, raising=False)
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+
+    def caller(options):
+        if var == "spark-defaults.conf":
+            (tmp_path / var).write_text(f"spark.driver.extraJavaOptions {options}\n")
+        else:
+            monkeypatch.setenv(var, options)
+
+    assert session.driver_java_options() == session.DRIVER_JAVA_OPTIONS
+    assert session.COLLECTOR in session.DRIVER_JAVA_OPTIONS
+    caller("-Xss2m -XX:+UseSerialGC")
+    opts = session.driver_java_options()
+    assert session.COLLECTOR not in opts and "-XX:MetaspaceSize=256m" in opts
+    assert opts == session.DRIVER_JAVA_OPTIONS.replace(f" {session.COLLECTOR}", "")
+    caller("-XX:+UseGCOverheadLimit -XX:+UseAdaptiveSizePolicyWithSystemGC")
+    assert session.driver_java_options() == session.DRIVER_JAVA_OPTIONS
 
 
 # a fresh interpreter, so get_spark launches a JVM of its own;
@@ -67,29 +114,49 @@ _CHILD = """
 import json, sys
 sys.path[:0] = [sys.argv[1], sys.argv[1] + "/tests"]
 from legislative_bills_database_spark.session import get_spark
-from test_session import FLAGS, vm_options
+from test_session import FLAGS, gc_flags, vm_options
 spark = get_spark(app_name="jit-override", cpus=1)
 try:
-    print(json.dumps(vm_options(spark, FLAGS)))
+    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    print(json.dumps({"flags": vm_options(spark, {**FLAGS, **gc_flags(True)}),
+                      "gc": sorted(b.getName() for b in beans)}))
 finally:
     spark.stop()
 """
 
 
-@pytest.mark.slow  # launches a second JVM
-def test_caller_extra_java_options_override_profile(tmp_path):
-    env = dict(os.environ)
-    env["PYSPARK_SUBMIT_ARGS"] = (
-        "--conf spark.driver.extraJavaOptions=-XX:Tier4InvocationThreshold=7000"
-        f" --conf spark.local.dir={tmp_path} pyspark-shell"
-    )
+def _launch(tmp_path, extra_java_options: str = "") -> dict:
+    """Flags and collector names of a JVM that get_spark launches with a
+    1 GB heap and ``extra_java_options``."""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    extra = f"--conf spark.driver.extraJavaOptions={extra_java_options} " if extra_java_options else ""
+    env["PYSPARK_SUBMIT_ARGS"] = f"{extra}--conf spark.local.dir={tmp_path} pyspark-shell"
     out = subprocess.run(
         [sys.executable, "-c", _CHILD, str(REPO)],
         env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    got = json.loads(out.stdout.strip().splitlines()[-1])
-    assert got == {**FLAGS, "Tier4InvocationThreshold": "7000"}
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_small_heap_driver_jvm_runs_parallel_gc(tmp_path):
+    got = _launch(tmp_path)
+    assert got["flags"] == {**FLAGS, **gc_flags(True)}
+    assert got["gc"] == ["PS MarkSweep", "PS Scavenge"]
+
+
+@pytest.mark.slow  # launches a second JVM
+def test_caller_extra_java_options_override_profile(tmp_path):
+    got = _launch(tmp_path, "-XX:Tier4InvocationThreshold=7000")
+    assert got["flags"] == {**FLAGS, "Tier4InvocationThreshold": "7000", **gc_flags(True)}
+
+
+@pytest.mark.slow  # launches a second JVM
+def test_caller_collector_overrides_profile_collector(tmp_path):
+    # with both collectors selected HotSpot would not start
+    got = _launch(tmp_path, "-XX:+UseG1GC")
+    assert got["gc"] and all(name.startswith("G1 ") for name in got["gc"]), got["gc"]
+    assert got["flags"] == {**FLAGS, **gc_flags(False)}
 
 
 def test_arrow_udfs_fork_from_one_worker_daemon(spark):

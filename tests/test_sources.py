@@ -197,6 +197,20 @@ def test_read_pdf_lines(spark, tmp_path):
     assert "AB 128  Budget Act of 2021" in vals
 
 
+def test_read_pdf_lines_fails_on_a_pdf_without_text(spark, tmp_path):
+    (tmp_path / "2021_Budget_Bills.pdf").write_bytes(_make_pdf(["AB 128  Budget Act of 2021"]))
+    (tmp_path / "2022_Budget_Bills.pdf").write_bytes(_make_pdf([]))
+    with pytest.raises(Exception, match=r"2022_Budget_Bills\.pdf: the PDF yields no text"):
+        read_pdf_lines(spark, str(tmp_path / "*.pdf")).collect()
+
+
+def test_read_html_docs_fails_on_a_file_that_is_not_utf8(spark, tmp_path):
+    (tmp_path / "2021_AB128.html").write_text(HTML)
+    (tmp_path / "2021_AB129.html").write_bytes(b"<p>caf\xe9</p>")  # latin-1, not UTF-8
+    with pytest.raises(Exception, match=r"2021_AB129\.html: not valid UTF-8"):
+        read_html_docs(spark, str(tmp_path / "*.html")).collect()
+
+
 # ---------------------------------------------------------------------------
 # Sinks + cache
 # ---------------------------------------------------------------------------
