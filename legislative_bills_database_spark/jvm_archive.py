@@ -57,14 +57,23 @@ it at launch instead of loading them from the jars.
   the JVM must list the archive; if not, one warning names the reason
   when it is known (e.g. a class path that differs from the archive's),
   and nothing is rebuilt.
-- Off switch: ``-Xshare:off`` in ``spark.driver.extraJavaOptions`` (e.g. in
-  ``PYSPARK_SUBMIT_ARGS``): no build, and HotSpot maps nothing.
+- Off switch: ``-Xshare:off`` in any of the caller's flags
+  (``caller_java_options``): no build, no ``.failed`` marker, and
+  HotSpot maps nothing. The training JVM gets none of them, so the
+  shared archive is trained with exactly the flags its key hashes.
+- Bound: after promoting an archive, a build keeps it and the most
+  recently used other ``.jsa`` (``plan`` touches each archive it hands
+  out), so two checkouts run in turn keep theirs, and deletes every
+  other key's ``.jsa``, ``.log``, ``.failed`` and ``.part`` files. A key
+  whose ``.lock`` is held is skipped; lock files stay (unlinking one that
+  another process is opening would break the mutual exclusion).
 - Only launches by ``get_spark`` get the archive. A context restart in a
   live JVM, the session handed to ``__spark_entry__.entry`` and any
   session given to ``session.tune_session`` keep the JVM they have.
 
 Build (or check) the archive ahead of time, e.g. before paired benchmark
-runs, and print its key, path, size and whether a fresh JVM maps it::
+runs, and print its key, path, size, the cache's other archives and
+whether a fresh JVM maps it::
 
     python -m legislative_bills_database_spark.jvm_archive
 """
@@ -83,9 +92,11 @@ import subprocess
 import sys
 import time
 import warnings
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 from pathlib import Path
+
+from pyspark.find_spark_home import _find_spark_home
 
 CACHE_NAME = "legislative-bills-engine"
 MODULE = "legislative_bills_database_spark.jvm_archive"
@@ -96,6 +107,8 @@ TRAIN_JAVA_OPTIONS = "-Xbatch"
 # a training pass takes about a minute on 4 vCPUs; this bounds a hung one
 TRAIN_TIMEOUT_S = 900
 PROBE_TIMEOUT_S = 120
+# the environment variables that carry a caller's flags for the driver JVM
+CALLER_VARIABLES = ("PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS")
 
 _warned: set[str] = set()
 
@@ -186,19 +199,26 @@ class Plan:
         return f" -XX:SharedArchiveFile={self.archive}" if self.archive else ""
 
 
-def _xshare_off() -> bool:
-    return "-Xshare:off" in os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+def conf_dir() -> str:
+    """The Spark conf directory: ``SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``."""
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+
+
+def caller_java_options() -> str:
+    """Everything the caller set for the driver JVM: ``CALLER_VARIABLES``
+    and the conf directory's ``spark-defaults.conf``, as one string."""
+    caller = [os.environ.get(v, "") for v in CALLER_VARIABLES]
+    with suppress(OSError):
+        caller.append(Path(conf_dir(), "spark-defaults.conf").read_text())
+    return "\n".join(caller)
 
 
 def plan() -> Plan:
     """The archive for the next JVM launch, built first if it is missing
     (see the module docstring)."""
-    from pyspark.find_spark_home import _find_spark_home
-
-    if _xshare_off():
+    if "-Xshare:off" in caller_java_options():
         return Plan(None)
-    spark_home = _find_spark_home()
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    conf = conf_dir()
     try:
         real = sorted(f for f in os.listdir(conf) if not f.endswith(".template"))
     except FileNotFoundError:
@@ -221,17 +241,21 @@ def plan() -> Plan:
         warn_once(f"the driver JVM runs without the class-data archive: {e}")
         return Plan(None)
     java = java_binary()
+    spark_home = _find_spark_home()
     class_path = launch_class_path(spark_home, str(empty))
     archive = cache / f"{archive_key(java, spark_home, class_path)}.jsa"
     out = Plan(archive, str(empty), class_path, java)
     if archive.exists():
+        with suppress(OSError):
+            os.utime(archive)  # used now: prune keeps it
         return out
     failed = archive.with_suffix(".failed")
     error = failed.read_text() if failed.exists() else None
     if error is None:
         from .session import PACKAGE_PARENT
 
-        env = dict(os.environ, SPARK_CONF_DIR=str(empty))
+        env = {k: v for k, v in os.environ.items() if k not in CALLER_VARIABLES}
+        env["SPARK_CONF_DIR"] = str(empty)
         env["PYTHONPATH"] = os.pathsep.join(p for p in [PACKAGE_PARENT, env.get("PYTHONPATH", "")] if p)
         error = build_archive(
             archive, lambda part: [sys.executable, "-m", MODULE, "--train", str(part)],
@@ -306,10 +330,32 @@ def build_archive(archive: Path, train, java: str, class_path: str, env: dict | 
             with open(log, "a") as fh:
                 fh.write(f"\nbuilt {archive} ({archive.stat().st_size} bytes) in "
                          f"{time.perf_counter() - t0:.1f} s\n")
+            prune(archive)
             return None
         part.unlink(missing_ok=True)
         failed.write_text(error + "\n")
         return error
+
+
+def prune(archive: Path) -> None:
+    """Delete the files of every key in ``archive``'s directory but
+    ``archive``'s and the most recently used other archive's (see the
+    module docstring)."""
+    used = {}
+    for other in archive.parent.glob("*.jsa"):
+        with suppress(OSError):
+            used[other.stem] = other.stat().st_mtime_ns
+    used.pop(archive.stem, None)
+    keep = {archive.stem, max(used, key=used.get, default=None)}
+    for lock_path in archive.parent.glob("*.lock"):
+        if lock_path.stem in keep:
+            continue
+        with suppress(OSError), open(lock_path, "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)  # BlockingIOError: in use
+            for suffix in (".jsa", ".log", ".failed"):
+                lock_path.with_suffix(suffix).unlink(missing_ok=True)
+            for part in archive.parent.glob(f"{lock_path.stem}.*.part"):
+                part.unlink(missing_ok=True)
 
 
 @contextmanager
@@ -343,8 +389,6 @@ def check_mapped(pid: int, p: Plan) -> bool:
         argv = Path(f"/proc/{pid}/cmdline").read_bytes().decode().split("\0")
     except OSError:
         argv = []
-    if "-Xshare:off" in argv:
-        return False  # the caller turned it off
     cp = argv[argv.index("-cp") + 1] if "-cp" in argv[:-1] else None
     if cp is not None and cp != p.class_path:
         why = f"the JVM's class path {cp} differs from the archive's {p.class_path}"
@@ -461,7 +505,7 @@ def train(part: str) -> None:
     with tempfile.TemporaryDirectory(prefix="lbe-train-") as tmp:
         os.chdir(tmp)
         data_root, pdf_dir, transport = _training_tree(Path(tmp))
-        java_options = f"{session.driver_java_options()} {TRAIN_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={part}"
+        java_options = f"{session.DRIVER_JAVA_OPTIONS} {TRAIN_JAVA_OPTIONS} -XX:ArchiveClassesAtExit={part}"
         spark = session.session_builder("legislative-bills-engine-train", 2, None, java_options).getOrCreate()
         session.add_worker_path(spark)
         proc = SparkContext._gateway.proc
@@ -496,10 +540,13 @@ def main(argv: list[str]) -> int:
     t0 = time.perf_counter()
     p = plan()
     if p.archive is None:
-        print("no class-data archive (see the warning above)")
+        print("no class-data archive (-Xshare:off in the caller's flags, else see the warning above)")
         return 1
     print(f"key:  {p.archive.stem}\npath: {p.archive}\nsize: {p.archive.stat().st_size} bytes"
           f"\nready in {time.perf_counter() - t0:.1f} s")
+    for other in sorted(p.archive.parent.glob("*.jsa")):
+        if other != p.archive:
+            print(f"other archive: {other.name} ({other.stat().st_size} bytes)")
     error = probe(p.java, p.class_path, p.archive)
     print(f"a fresh JVM maps it: {'yes' if error is None else 'no, ' + error}")
     return 0 if error is None else 1

@@ -36,11 +36,11 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   maps it). A conf directory holding only ``*.template`` files is
   swapped for an empty one around the launch (HotSpot needs an empty
   directory on the class path); one with a real file is left alone and
-  the JVM runs without the archive. ``-Xshare:off`` in
-  ``extraJavaOptions`` turns it off. Like the JIT profile it applies
-  only when this factory launches the JVM: a context restart in a live
-  JVM, the session handed to ``__spark_entry__.entry`` and a session
-  given to ``tune_session`` get no archive.
+  the JVM runs without the archive. ``-Xshare:off`` in the caller's
+  flags (``jvm_archive.caller_java_options``) turns it off. Like the JIT
+  profile it applies only when this factory launches the JVM: a context
+  restart in a live JVM, the session handed to ``__spark_entry__.entry``
+  and a session given to ``tune_session`` get no archive.
 - ``lower``/``upper`` without ICU (``spark.sql.icu.caseMappings.enabled``
   off). With Spark 4.1's default (on), the first ``lower()`` in a JVM
   initialises ``CollationAwareUTF8String``, whose static initialiser
@@ -96,10 +96,10 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   metaspace (archived classes do not count), so it runs no
   metadata-triggered collection. A caller's collector wins: HotSpot
   refuses to start with two collectors selected (``Multiple garbage
-  collectors selected``), so when ``PYSPARK_SUBMIT_ARGS``,
-  ``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS`` or the Spark conf
-  directory's ``spark-defaults.conf`` names one (``-XX:[+-]Use...GC``),
-  ``driver_java_options`` leaves out ``COLLECTOR`` and keeps the rest.
+  collectors selected``), so when the caller's flags
+  (``jvm_archive.caller_java_options``, the one reader of them) name one
+  (``-XX:[+-]Use...GC``), ``driver_java_options`` leaves out
+  ``COLLECTOR`` and keeps the rest.
   Like the JIT profile it applies only when this factory launches the
   JVM: a session built elsewhere keeps its own collector.
 - The driver JVM's flags above are one string, ``DRIVER_JAVA_OPTIONS``:
@@ -268,27 +268,11 @@ def heap_mb(size: str) -> float:
     return int(m[1]) * {"k": 1 / 1024, "": 1, "m": 1, "g": 1024, "t": 1024**2}[m[2]]
 
 
-def _caller_names_a_collector() -> bool:
-    """Whether ``PYSPARK_SUBMIT_ARGS``, ``JAVA_TOOL_OPTIONS``,
-    ``JDK_JAVA_OPTIONS`` or the Spark conf directory's
-    ``spark-defaults.conf`` selects a collector."""
-    from pyspark.find_spark_home import _find_spark_home
-
-    caller = [os.environ.get(v, "") for v in ("PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS")]
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
-    try:
-        with open(os.path.join(conf, "spark-defaults.conf")) as f:
-            caller.append(f.read())
-    except OSError:
-        pass
-    return any(_COLLECTOR_FLAG.search(v) for v in caller)
-
-
 def driver_java_options() -> str:
     """``DRIVER_JAVA_OPTIONS`` without ``COLLECTOR`` when the driver heap
     is larger than ``PARALLEL_GC_MAX_HEAP_MB`` (the JVM keeps G1) or when
     the caller names a collector (the caller's collector wins)."""
-    if heap_mb(driver_memory()) > PARALLEL_GC_MAX_HEAP_MB or _caller_names_a_collector():
+    if heap_mb(driver_memory()) > PARALLEL_GC_MAX_HEAP_MB or _COLLECTOR_FLAG.search(jvm_archive.caller_java_options()):
         return DRIVER_JAVA_OPTIONS.replace(f" {COLLECTOR}", "")
     return DRIVER_JAVA_OPTIONS
 
@@ -307,14 +291,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if SparkContext._gateway is not None:  # a restart in the live JVM
-        spark = session_builder(app_name, cpus, shuffle_partitions, driver_java_options()).getOrCreate()
-    else:
-        plan = jvm_archive.plan()
-        java_options = driver_java_options() + plan.java_options
-        builder = session_builder(app_name, cpus, shuffle_partitions, java_options)
-        with jvm_archive.launch_env(plan):
-            spark = builder.getOrCreate()
+    launch = SparkContext._gateway is None  # else a restart in the live JVM
+    plan = jvm_archive.plan() if launch else jvm_archive.Plan(None)
+    builder = session_builder(app_name, cpus, shuffle_partitions, driver_java_options() + plan.java_options)
+    with jvm_archive.launch_env(plan):
+        spark = builder.getOrCreate()
+    if launch:
         jvm_archive.check_mapped(spark.sparkContext._gateway.proc.pid, plan)
     add_worker_path(spark)
     return spark

@@ -2,13 +2,17 @@
 never promoted (a truncated archive crashes the JVM that maps it, never
 the caller), a class path that differs from the archive's falls back and
 is reported, the key follows the jar listing, a conf directory with a
-real file is never hidden, and ``os.environ`` comes back unchanged.
+real file is never hidden, ``os.environ`` comes back unchanged, the
+caller's ``-Xshare:off`` in any variable stops a build and no caller
+variable reaches one, and a build keeps only the newest and the most
+recently used archive.
 
 The default-lane tests use a toy class path (one-class jar plus an empty
 directory); the ``slow`` one builds the real archive in a fresh cache."""
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import subprocess
@@ -23,6 +27,7 @@ from conftest import REPO
 from legislative_bills_database_spark import jvm_archive
 from legislative_bills_database_spark.jvm_archive import (
     CACHE_NAME,
+    CALLER_VARIABLES,
     Plan,
     archive_key,
     build_archive,
@@ -151,7 +156,8 @@ def test_key_changes_with_the_driver_jvm_flags(tmp_path, monkeypatch):
 def no_build(monkeypatch, tmp_path):
     """A cache under tmp_path and a build that only records its env."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
-    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    for var in CALLER_VARIABLES:
+        monkeypatch.delenv(var, raising=False)
     builds = []
 
     def fake_build(archive, train, java, class_path, env=None):
@@ -207,16 +213,54 @@ def test_template_only_conf_dir_is_swapped_only_around_the_launch(no_build, tmp_
             assert os.environ["SPARK_CONF_DIR"] == str(empty)
             raise RuntimeError("launch failed")
     assert dict(os.environ) == before
+    os.utime(p.archive, ns=(0, 0))
     assert _plan() == (p, []) and len(no_build) == 1  # built once
+    assert p.archive.stat().st_mtime_ns > 0  # and marked used
 
 
-def test_no_archive_without_a_writable_cache_or_with_xshare_off(no_build, tmp_path, monkeypatch):
+@pytest.mark.parametrize("var", ["PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"])
+def test_no_archive_without_a_writable_cache_or_with_xshare_off(no_build, tmp_path, monkeypatch, var):
     (tmp_path / "file").write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file"))
     p, warned = _plan()
     assert p.archive is None and len(warned) == 1 and "without the class-data archive" in warned[0]
-    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--conf spark.driver.extraJavaOptions=-Xshare:off pyspark-shell")
+    # a writable cache, and the caller's off switch
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    off = "-Xshare:off"
+    if var == "PYSPARK_SUBMIT_ARGS":
+        off = f"--conf spark.driver.extraJavaOptions={off} pyspark-shell"
+    monkeypatch.setenv(var, off)
     assert _plan() == (Plan(None), []) and no_build == []
+    assert not list(tmp_path.rglob("*.failed"))
+
+
+def test_the_training_build_gets_none_of_the_callers_variables(no_build, tmp_path, monkeypatch):
+    (tmp_path / "conf").mkdir()
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "conf"))
+    for var in CALLER_VARIABLES:
+        monkeypatch.setenv(var, f"-Xlog:gc:file={tmp_path}/gc.log")
+    p, warned = _plan()
+    assert warned == [] and p.archive.exists() and len(no_build) == 1
+    assert not set(CALLER_VARIABLES) & set(no_build[0])
+    assert no_build[0]["PATH"] == os.environ["PATH"]
+
+
+def test_a_build_keeps_the_newest_and_the_most_recently_used_archive(toy_cp, tmp_path):
+    k1, k2, k3, k4 = (tmp_path / f"k{i}.jsa" for i in range(1, 5))
+    for archive in (k1, k2):
+        assert build_archive(archive, dump(toy_cp), JAVA, toy_cp) is None
+    os.utime(k1)  # a launch used k1 after k2 was built
+    for name in ("k0.failed", "k0.lock", "k0.99.part"):  # a key whose build failed
+        (tmp_path / name).write_text("")
+    assert build_archive(k3, dump(toy_cp), JAVA, toy_cp) is None
+    assert sorted(p.name for p in tmp_path.iterdir() if p.suffix != ".lock") == [
+        "k1.jsa", "k1.log", "k3.jsa", "k3.log"]
+    assert sorted(p.name for p in tmp_path.glob("*.lock")) == ["k0.lock", "k1.lock", "k2.lock", "k3.lock"]
+    # a key whose lock another process holds is left alone
+    with open(tmp_path / "k1.lock") as held:
+        fcntl.flock(held, fcntl.LOCK_EX)
+        assert build_archive(k4, dump(toy_cp), JAVA, toy_cp) is None
+    assert sorted(p.name for p in tmp_path.glob("*.jsa")) == ["k1.jsa", "k3.jsa", "k4.jsa"]
 
 
 # get_spark in a fresh interpreter (so it launches a JVM); prints the
