@@ -67,17 +67,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return [[float(x) for x in row] for row in rng.standard_normal((n_planes, dim))]
 
 
-def lsh_signature(vec_col: str, planes: list[list[float]]) -> F.Column:
-    """Bit signature: bit i = 1 iff dot(vec, plane_i) > 0. Returns a long."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        d = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
-        sig = sig + F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
-
-
 def lsh_bucket_assignments(
     df: DataFrame,
     id_col: str,
@@ -97,8 +86,8 @@ def lsh_bucket_assignments(
 
     All n_tables×n_planes projections are ONE Arrow-batched pandas UDF
     doing a single numpy matmul per batch. This is the deliberate
-    exception to the builtins-only rule: the expression form
-    (:func:`lsh_signature` per table) builds an
+    exception to the builtins-only rule: the expression form (per table
+    a sum of ``when(dot(vec, plane_i) > 0, 1 << i)`` bits) builds an
     O(n_tables·n_planes·dim)-literal tree that blows past JIT method
     limits — measured ~5 s of planning alone at 64 planes — while the
     matmul is O(1) expression nodes and vectorized end to end.

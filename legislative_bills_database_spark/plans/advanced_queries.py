@@ -1999,57 +1999,27 @@ def q_stream_totals(spark, sf_dir):
     aggregate. A green row certifies the Arrow state-handoff path
     (get/update/timeout plumbing), not just the built-in operators the
     other censuses cover."""
+    from ..streaming.census import StreamCensus
     from ..streaming.stateful import running_user_totals
 
-    # update-mode emits one row per user per batch; the LAST row per
-    # user is the final running total — the census reduces to it
-    # before diffing against the batch aggregate
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    from ..io import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_totals_")
-    name = "q_stream_totals_" + _uuid.uuid4().hex[:8]
-    try:
-        json_dir = f"{tmp}/events_json"
-        events.select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        ).repartitionByRange(4, "ts").write.json(json_dir)
-        landed_schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
-        stream_df = (
-            spark.readStream.format("json")
-            .schema(landed_schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(json_dir)
-        )
-        from ..streaming.events import CENSUS_STREAM_CONFS
-
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    with StreamCensus(spark, "q_stream_totals") as census:
+        path, schema = census.land(events.repartitionByRange(4, "ts"))
         # shuffle=8 (not lower): applyInPandasWithState pushes all rows
         # through Python workers, so partitions = parallel workers here —
         # 4 measured slower (9.7 s vs 8.0 s), state overhead is not the
         # bottleneck for this census
-        with scoped_conf(spark, CENSUS_STREAM_CONFS):
-            q = (
-                running_user_totals(stream_df)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        n_batches = len(q.recentProgress)
-        # last update per user = running total after the final batch
-        # seen for that user; n_events is monotone so max() selects it
+        table, progress = census.run(
+            running_user_totals(census.stream(path, schema)), "update"
+        )
+        n_batches = len(progress)
+        # update-mode emits one row per user per batch; the LAST row per
+        # user is the final running total — n_events is monotone, so
+        # max() selects it before diffing against the batch aggregate
         streamed = (
-            spark.table(name)
-            .groupBy("user_id")
+            table.groupBy("user_id")
             .agg(
                 F.max(F.struct("n_events", "total_value")).alias("s")
             )
@@ -2060,8 +2030,8 @@ def q_stream_totals(spark, sf_dir):
             )
         )
         batch_df = (
-            spark.read.schema(landed_schema)
-            .json(json_dir)
+            spark.read.schema(schema)
+            .json(path)
             .groupBy("user_id")
             .agg(
                 F.count("*").alias("n_events"),
@@ -2085,27 +2055,12 @@ def q_stream_totals(spark, sf_dir):
             )
             .collect()[0]
         )
-        equal = bool(
-            row.n_mismatch == 0 and row.n_batch == row.n_stream
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    row.n_batch,
-                    row.n_stream,
-                    row.n_mismatch,
-                    int(n_batches),
-                    equal,
-                )
-            ],
-            "n_batch long, n_stream long, n_mismatch long,"
-            " n_microbatches long, equal boolean",
-        )
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(tmp, ignore_errors=True)
+    equal = bool(row.n_mismatch == 0 and row.n_batch == row.n_stream)
+    return spark.createDataFrame(
+        [(row.n_batch, row.n_stream, row.n_mismatch, int(n_batches), equal)],
+        "n_batch long, n_stream long, n_mismatch long,"
+        " n_microbatches long, equal boolean",
+    )
 
 
 @query("q_ivf_sweep")  # seeded IVF recall curve → rows-only

@@ -151,10 +151,9 @@ def q_ewma_chunked(spark, sf_dir):
     """,
 )
 def q_hopping_window_batch(spark, sf_dir):
-    """Hopping (sliding) 1-hour/30-minute window aggregate — the batch
-    twin of streaming sliding_counts (SURVEY §2.8): each event lands in
-    exactly 2 overlapping windows (window() explodes executor-side, then
-    one partial-agg shuffle). Oracle: UNION ALL of the two epoch-aligned
+    """Hopping (sliding) 1-hour/30-minute window aggregate (SURVEY
+    §2.8): each event lands in exactly 2 overlapping windows (window()
+    explodes executor-side, then one partial-agg shuffle). Oracle: UNION ALL of the two epoch-aligned
     30-minute truncations — the same window-membership algebra."""
     events = load_table(spark, sf_dir, "events")
     return (

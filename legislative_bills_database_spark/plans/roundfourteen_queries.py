@@ -1137,87 +1137,48 @@ def q_stream_rate_limit(spark, sf_dir):
 
     Wall time is micro-batch overhead by nature → rows-only with
     pytest pins (the stream-census discipline)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    from ..streaming.events import CENSUS_STREAM_CONFS
+    from ..streaming.census import StreamCensus
 
     events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_rate_limit_")
-    try:
-        json_dir = f"{tmp}/events_json"
-        (
-            events.select("event_id", "ts", "event_type")
-            .repartition(_RL_FILES)
-            .write.json(json_dir)
-        )
-        landed_schema = "event_id long, ts timestamp, event_type string"
-
-        results = {}
+    results = {}
+    with StreamCensus(spark, "q_stream_rate_limit") as census:
+        landed = events.select("event_id", "ts", "event_type")
+        path, schema = census.land(landed.repartition(_RL_FILES))
         for label, mft in (("mft1", 1), ("mft4", 4), ("nolimit", None)):
-            reader = (
-                spark.readStream.format("json")
-                .schema(landed_schema)
-            )
-            if mft is not None:
-                reader = reader.option("maxFilesPerTrigger", mft)
-            stream_df = reader.load(json_dir)
-            agg = stream_df.groupBy("event_type").agg(
+            agg = census.stream(path, schema, mft).groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n")
             )
-            name = f"q_stream_rate_{label}_" + _uuid.uuid4().hex[:8]
-            with scoped_conf(spark, CENSUS_STREAM_CONFS):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode("complete")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                if not q.awaitTermination(180):
-                    q.stop()
-                    raise RuntimeError(
-                        f"rate-limit census stream {label} did not "
-                        f"finish within 180s"
-                    )
+            table, progress = census.run(agg, "complete")
             n_batches = sum(
-                1
-                for p in q.recentProgress
-                if int(p.get("numInputRows", 0) or 0) > 0
+                1 for p in progress if int(p.get("numInputRows", 0) or 0) > 0
             )
-            rows = {
-                r["event_type"]: r["n"]
-                for r in spark.table(name).collect()
-            }
+            rows = {r["event_type"]: r["n"] for r in table.collect()}
             results[label] = (n_batches, rows)
 
-        nb1, r1 = results["mft1"]
-        nb4, r4 = results["mft4"]
-        nbu, ru = results["nolimit"]
-        rows_total = sum(r1.values())
-        return spark.createDataFrame(
-            [
-                (
-                    _RL_FILES,
-                    int(nb1),
-                    int(nb4),
-                    int(nbu),
-                    int(rows_total),
-                    int(r1 == r4 == ru),
-                    int(
-                        nb1 == _RL_FILES
-                        and nb4 == (_RL_FILES + 3) // 4
-                        and nbu == 1
-                    ),
-                )
-            ],
-            "n_files int, n_batches_mft1 int, n_batches_mft4 int,"
-            " n_batches_nolimit int, rows_total long,"
-            " results_agree int, backpressure_holds int",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    nb1, r1 = results["mft1"]
+    nb4, r4 = results["mft4"]
+    nbu, ru = results["nolimit"]
+    rows_total = sum(r1.values())
+    return spark.createDataFrame(
+        [
+            (
+                _RL_FILES,
+                int(nb1),
+                int(nb4),
+                int(nbu),
+                int(rows_total),
+                int(r1 == r4 == ru),
+                int(
+                    nb1 == _RL_FILES
+                    and nb4 == (_RL_FILES + 3) // 4
+                    and nbu == 1
+                ),
+            )
+        ],
+        "n_files int, n_batches_mft1 int, n_batches_mft4 int,"
+        " n_batches_nolimit int, rows_total long,"
+        " results_agree int, backpressure_holds int",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_tables
-from ..session import scoped_conf
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1631,6 +1630,20 @@ _STATE_PROVIDERS = {
 }
 
 
+def _state_stats(progress) -> tuple[int, int, int]:
+    """(stateful micro-batches, final state rows, final state-memory
+    bytes) from a stream's ``recentProgress``."""
+    state_rows = mem_bytes = n_batches = 0
+    for p in progress:
+        ops = p.get("stateOperators") or []
+        if not ops:
+            continue
+        n_batches += 1
+        state_rows = int(ops[0].get("numRowsTotal", 0))
+        mem_bytes = int(ops[0].get("memoryUsedBytes", 0))
+    return n_batches, state_rows, mem_bytes
+
+
 @query("q_stream_state_census")  # runs real availableNow streams
 def q_stream_state_census(spark, sf_dir):
     """State-store SIZE certificate for a windowed streaming aggregate,
@@ -1651,99 +1664,60 @@ def q_stream_state_census(spark, sf_dir):
     accounting, not JVM heap — the two columns are deliberately not
     comparable to each other, each is comparable to ITS backend's
     budget)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from ..io import load_table
-    from ..streaming.events import CENSUS_STREAM_CONFS
+    from ..streaming.census import CENSUS_STREAM_CONFS, StreamCensus
 
-    events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_state_")
-    names: dict[str, str] = {}
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
     prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        json_dir = f"{tmp}/events_json"
-        events.select("event_id", "ts", "user_id", "event_type", "value"
-                      ).repartitionByRange(4, "ts").write.json(json_dir)
-        landed_schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
-
+    with StreamCensus(spark, "q_stream_state_census") as census:
+        path, schema = census.land(events.repartitionByRange(4, "ts"))
         stats: dict[str, tuple[int, int, int]] = {}
+        outs = {}
         for prov, cls in _STATE_PROVIDERS.items():
-            name = f"q_stream_state_{prov}_" + _uuid.uuid4().hex[:8]
-            names[prov] = name
-            stream_df = (
-                spark.readStream.format("json")
-                .schema(landed_schema)
-                .option("maxFilesPerTrigger", 1)
-                .load(json_dir)
-            )
-            agg = stream_df.groupBy(
+            agg = census.stream(path, schema).groupBy(
                 F.window("ts", "1 hour").alias("w"), "event_type"
             ).agg(F.count(F.lit(1)).alias("n"))
-            with scoped_conf(spark, {prov_key: cls, **CENSUS_STREAM_CONFS}):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode("update")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-            state_rows = mem_bytes = n_batches = 0
-            for p in q.recentProgress:
-                ops = p.get("stateOperators") or []
-                if not ops:
-                    continue
-                n_batches += 1
-                state_rows = int(ops[0].get("numRowsTotal", 0))
-                mem_bytes = int(ops[0].get("memoryUsedBytes", 0))
-            stats[prov] = (n_batches, state_rows, mem_bytes)
+            outs[prov], progress = census.run(
+                agg, "update", {prov_key: cls, **CENSUS_STREAM_CONFS}
+            )
+            stats[prov] = _state_stats(progress)
 
         n_groups = (
-            spark.read.schema(landed_schema)
-            .json(json_dir)
+            spark.read.schema(schema)
+            .json(path)
             .select(F.date_trunc("hour", "ts").alias("h"), "event_type")
             .distinct()
             .count()
         )
-        out_h = spark.table(names["hdfs"])
-        out_r = spark.table(names["rocksdb"])
+        out_h, out_r = outs["hdfs"], outs["rocksdb"]
         providers_agree = int(
             stats["hdfs"][1] == stats["rocksdb"][1]
             and out_h.exceptAll(out_r).count() == 0
             and out_r.exceptAll(out_h).count() == 0
         )
-        nb_h, rows_h, mem_h = stats["hdfs"]
-        nb_r, rows_r, mem_r = stats["rocksdb"]
-        return spark.createDataFrame(
-            [
-                (
-                    int(nb_h),
-                    int(rows_h),
-                    int(n_groups),
-                    int(rows_h == n_groups and rows_r == n_groups),
-                    int(mem_h),
-                    int(mem_h // rows_h) if rows_h else 0,
-                    int(mem_r),
-                    int(mem_r // rows_r) if rows_r else 0,
-                    providers_agree,
-                )
-            ],
-            "n_microbatches long, state_rows_final long, n_groups_batch"
-            " long, rows_match long, hdfs_memory_bytes long,"
-            " hdfs_bytes_per_row long, rocksdb_memory_bytes long,"
-            " rocksdb_bytes_per_row long, providers_agree long",
-        )
-    finally:
-        existing = {t.name for t in spark.catalog.listTables()}
-        for name in names.values():
-            if name in existing:
-                spark.catalog.dropTempView(name)
-        shutil.rmtree(tmp, ignore_errors=True)
+    nb_h, rows_h, mem_h = stats["hdfs"]
+    nb_r, rows_r, mem_r = stats["rocksdb"]
+    return spark.createDataFrame(
+        [
+            (
+                int(nb_h),
+                int(rows_h),
+                int(n_groups),
+                int(rows_h == n_groups and rows_r == n_groups),
+                int(mem_h),
+                int(mem_h // rows_h) if rows_h else 0,
+                int(mem_r),
+                int(mem_r // rows_r) if rows_r else 0,
+                providers_agree,
+            )
+        ],
+        "n_microbatches long, state_rows_final long, n_groups_batch"
+        " long, rows_match long, hdfs_memory_bytes long,"
+        " hdfs_bytes_per_row long, rocksdb_memory_bytes long,"
+        " rocksdb_bytes_per_row long, providers_agree long",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -369,37 +369,28 @@ def q_stream_tws_totals(spark, sf_dir):
       RocksDB here, proving fixture + diff logic sound.
     """
     import importlib.util
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
-    from ..streaming.events import CENSUS_STREAM_CONFS
+    from ..streaming.census import CENSUS_STREAM_CONFS, StreamCensus
     from ..streaming.stateful import (
         running_user_totals,
         running_user_totals_tws,
     )
 
-    events = load_table(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
     try:  # find_spec raises if even the parent 'google' pkg is absent
         have_protobuf = (
             importlib.util.find_spec("google.protobuf") is not None
         )
     except ModuleNotFoundError:
         have_protobuf = False
-    tmp = tempfile.mkdtemp(prefix="q_stream_tws_")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        json_dir = f"{tmp}/events_json"
-        events.select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        ).repartitionByRange(4, "ts").write.json(json_dir)
-        landed_schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
+    with StreamCensus(spark, "tws_census") as census:
+        path, schema = census.land(events.repartitionByRange(4, "ts"))
         batch_df = (
-            spark.read.schema(landed_schema)
-            .json(json_dir)
+            spark.read.schema(schema)
+            .json(path)
             .groupBy("user_id")
             .agg(
                 F.count("*").alias("n_events"),
@@ -414,41 +405,14 @@ def q_stream_tws_totals(spark, sf_dir):
                 if api == "transformWithStateInPandas"
                 else running_user_totals
             )
-            stream_df = (
-                spark.readStream.format("json")
-                .schema(landed_schema)
-                .option("maxFilesPerTrigger", 1)
-                .load(json_dir)
-            )
-            name = "tws_census_" + _uuid.uuid4().hex[:8]
             confs = {prov_key: _TWS_PROVIDERS[provider], **CENSUS_STREAM_CONFS}
-            q = None
             try:
-                with scoped_conf(spark, confs):
-                    q = (
-                        op(stream_df)
-                        .writeStream.format("memory")
-                        .queryName(name)
-                        .outputMode("update")
-                        .trigger(availableNow=True)
-                        .option(
-                            "checkpointLocation",
-                            f"{tmp}/cp_{name}",
-                        )
-                        .start()
-                    )
-                    if not q.awaitTermination(150):
-                        q.stop()
-                        raise RuntimeError(
-                            f"tws census: {api}/{provider} did not "
-                            f"drain in 150s"
-                        )
+                table, _ = census.run(
+                    op(census.stream(path, schema)), "update", confs
+                )
+            except TimeoutError:
+                raise  # an undrained stream is no census row
             except Exception as ex:  # classified refusal is the DATA
-                if q is not None:
-                    try:
-                        q.stop()
-                    except Exception:
-                        pass
                 s = str(ex)
                 if "exited unexpectedly" in s and not have_protobuf:
                     failure = "python-worker-protobuf-missing"
@@ -464,8 +428,7 @@ def q_stream_tws_totals(spark, sf_dir):
                     failure = s.splitlines()[0][:80]
                 return (api, provider, False, failure, None, None)
             streamed = (
-                spark.table(name)
-                .groupBy("user_id")
+                table.groupBy("user_id")
                 .agg(
                     F.max(F.struct("n_events", "total_value")).alias("s")
                 )
@@ -482,7 +445,6 @@ def q_stream_tws_totals(spark, sf_dir):
                 streamed.exceptAll(batch_df).count()
                 + batch_df.exceptAll(streamed).count()
             )
-            spark.catalog.dropTempView(name)
             equal = bool(
                 n_mismatch == 0 and n_stream_users == n_batch_users
             )
@@ -493,13 +455,11 @@ def q_stream_tws_totals(spark, sf_dir):
             run_one("transformWithStateInPandas", "rocksdb"),
             run_one("transformWithStateInPandas", "hdfs-heap"),
         ]
-        return spark.createDataFrame(
-            rows,
-            "api string, provider string, ran boolean,"
-            " failure string, batch_equal boolean, n_users long",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(
+        rows,
+        "api string, provider string, ran boolean,"
+        " failure string, batch_equal boolean, n_users long",
+    )
 
 
 # ---------------------------------------------------------------------------

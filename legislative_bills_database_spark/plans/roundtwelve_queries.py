@@ -836,29 +836,18 @@ def q_stream_state_scale(spark, sf_dir):
     Scale shape: the events fixture lands once as 4 time-ordered JSON
     files; 2 providers × 3 cardinalities = 6 real availableNow runs
     with 8 shuffle partitions (state commit overhead is per-partition
-    per-trigger, see streaming.events.CENSUS_STREAM_CONFS)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
+    per-trigger, see streaming.census.CENSUS_STREAM_CONFS)."""
+    from ..streaming.census import CENSUS_STREAM_CONFS, StreamCensus
+    from .roundnine_queries import _STATE_PROVIDERS, _state_stats
 
-    from ..streaming.events import CENSUS_STREAM_CONFS
-    from .roundnine_queries import _STATE_PROVIDERS
-
-    events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_state_scale_")
-    names: list[str] = []
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
     prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        json_dir = f"{tmp}/events_json"
-        events.select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        ).repartitionByRange(4, "ts").write.json(json_dir)
-        landed_schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
-        batch = spark.read.schema(landed_schema).json(json_dir)
-        rows = []
+    rows = []
+    with StreamCensus(spark, "q_stream_state_scale") as census:
+        path, schema = census.land(events.repartitionByRange(4, "ts"))
+        batch = spark.read.schema(schema).json(path)
         for prov, cls in sorted(_STATE_PROVIDERS.items()):
             for mult in _SSS_MULTS:
                 salted_key = F.concat_ws(
@@ -866,49 +855,14 @@ def q_stream_state_scale(spark, sf_dir):
                     F.col("event_type"),
                     F.pmod(F.col("event_id"), F.lit(mult)).cast("string"),
                 )
-                name = (
-                    f"q_sss_{prov}_{mult}_" + _uuid.uuid4().hex[:8]
-                )
-                names.append(name)
-                stream_df = (
-                    spark.readStream.format("json")
-                    .schema(landed_schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .load(json_dir)
-                )
-                agg = stream_df.groupBy(
+                agg = census.stream(path, schema).groupBy(
                     F.window("ts", "1 hour").alias("w"),
                     salted_key.alias("k"),
                 ).agg(F.count(F.lit(1)).alias("n"))
-                with scoped_conf(
-                    spark, {prov_key: cls, **CENSUS_STREAM_CONFS}
-                ):
-                    q = (
-                        agg.writeStream.format("memory")
-                        .queryName(name)
-                        .outputMode("update")
-                        .trigger(availableNow=True)
-                        .start()
-                    )
-                    # availableNow must DRAIN within the budget: on
-                    # timeout the stream would keep running after
-                    # the scope restores the provider conf and the
-                    # progress/state rows read would reflect a
-                    # half-finished run — fail loudly instead.
-                    if not q.awaitTermination(180):
-                        q.stop()
-                        raise RuntimeError(
-                            f"q_stream_state_scale: {name} did not "
-                            f"drain in 180s; census row meaningless"
-                        )
-                state_rows = mem_bytes = n_batches = 0
-                for p in q.recentProgress:
-                    ops = p.get("stateOperators") or []
-                    if not ops:
-                        continue
-                    n_batches += 1
-                    state_rows = int(ops[0].get("numRowsTotal", 0))
-                    mem_bytes = int(ops[0].get("memoryUsedBytes", 0))
+                _, progress = census.run(
+                    agg, "update", {prov_key: cls, **CENSUS_STREAM_CONFS}
+                )
+                n_batches, state_rows, mem_bytes = _state_stats(progress)
                 n_groups = (
                     batch.select(
                         F.date_trunc("hour", "ts").alias("h"),
@@ -929,18 +883,12 @@ def q_stream_state_scale(spark, sf_dir):
                         int(mem_bytes // state_rows) if state_rows else 0,
                     )
                 )
-        return spark.createDataFrame(
-            rows,
-            "provider string, key_mult long, n_microbatches long,"
-            " state_rows long, n_groups_batch long, rows_match long,"
-            " memory_bytes long, bytes_per_row long",
-        )
-    finally:
-        existing = {t.name for t in spark.catalog.listTables()}
-        for name in names:
-            if name in existing:
-                spark.catalog.dropTempView(name)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(
+        rows,
+        "provider string, key_mult long, n_microbatches long,"
+        " state_rows long, n_groups_batch long, rows_match long,"
+        " memory_bytes long, bytes_per_row long",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -7,8 +7,7 @@ Decode / feature-extract / resize / frame-sample run as Arrow-batched
 columnar, and the decode UDF's schema is declared so Catalyst can prune
 everything else around it.
 
-The actual decoders (PIL / torchaudio / ffmpeg) are NOT in this
-container, so :func:`decode_image` raises ``NotImplementedError`` and
+No real decoder (PIL / torchaudio / ffmpeg) is a dependency, so
 tests/bench use :func:`fake_image_features`, a clearly-marked
 deterministic stand-in with the identical Spark-side plumbing (schema,
 batching, partitioning).
@@ -36,17 +35,6 @@ FEATURE_DIM = 8
 FEATURE_SCHEMA = (
     "doc_id long, mime string, n_bytes long, features array<double>"
 )
-
-
-def decode_image(payload: bytes) -> "object":
-    """Real image decode — requires an image library not present here.
-
-    STUB: wire PIL/opencv here in a real deployment.
-    """
-    raise NotImplementedError(
-        "image decoding requires PIL/opencv, not available in this container; "
-        "use fake_image_features for plumbing tests"
-    )
 
 
 def _fake_features(payload: bytes) -> list[float]:

@@ -2,14 +2,15 @@
 
 Not in the reference (strictly batch); this is the north-star streaming
 surface: the same logical windows/dedup/sessionization as the batch
-queries, expressed over an unbounded source. Not DuckDB-checkable →
-verified by batch/stream agreement tests, never declared in queries().
+queries, expressed over an unbounded source. Not DuckDB-checkable, so
+the 12 ``q_stream_*`` queries are declared rows-only: each is a census
+that runs a bounded stream against its batch twin and returns the
+verdict as rows (``census.StreamCensus`` owns the run around it).
 """
 
 from .events import (  # noqa: F401
     dedup_within_watermark,
     session_counts,
-    sliding_counts,
     stream_events_from_files,
     tumbling_counts,
 )

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
+from .census import StreamCensus
 
 # events fixture shape (FIXTURES.md §B) — ts as timestamp here; the
 # parquet NANOS quirk is a batch-reader concern, streaming tests feed JSON
@@ -66,26 +66,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window event counts per type."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 def dedup_within_watermark(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -97,32 +77,6 @@ def dedup_within_watermark(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys or ["event_id"]
     )
-
-
-# Confs for a census's availableNow run (applied with session.scoped_conf).
-#
-# - few shuffle partitions: stateful micro-batches pay per-partition
-#   state-store snapshot/commit overhead EVERY trigger (measured
-#   4.5-8.7 s/batch at 32 partitions for 25k-row batches — state
-#   machinery, not data). A production deployment sizes this to state
-#   volume, not the session's batch shuffle width.
-# - no-data micro-batches off: availableNow appends a final no-data
-#   trigger whose only job is advancing the watermark past the last
-#   batch; the censuses here either run effectively-unbounded
-#   watermarks (nothing to finalize) or are complete-mode over
-#   time-ordered files where the watermark is already data-maximal
-#   after the last data batch, so the extra ~0.5 s trigger provably
-#   changes no census row (verified rows-identical at sf0.001/0.1).
-#
-# Measured negative result (r6): RocksDBStateStoreProvider ran the
-# parity/session censuses ~10% SLOWER (3.97/4.39 s vs 3.55/4.04 s,
-# min-of-2 at sf0.1) — native-store setup dominates at census-sized
-# state; RocksDB pays off when state exceeds executor heap, which a
-# production deployment opts into per stream, not globally.
-CENSUS_STREAM_CONFS = {
-    "spark.sql.shuffle.partitions": "8",
-    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-}
 
 
 def _run_parity_census(
@@ -146,74 +100,45 @@ def _run_parity_census(
     shuffles). Only the 4-column census reaches the driver, so the
     report works at any input scale.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from ..io import load_table
 
-    events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix=f"{prefix}_")
-    name = prefix + "_" + uuid.uuid4().hex[:8]
-    try:
-        json_dir = f"{tmp}/events_json"
-        # 3 files × maxFilesPerTrigger=1 below = 3 micro-batches, so
+    landed = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    if row_filter is not None:
+        # slice BEFORE landing (not in the builders): both sides read
+        # the same smaller files, so every JSON pass shrinks too
+        landed = landed.filter(row_filter)
+    with StreamCensus(spark, prefix) as census:
+        # 3 files × one file per trigger = 3 micro-batches, so
         # windows/sessions genuinely accumulate across batches (two
         # cross-batch state merges; state semantics per extra batch are
         # identical, while each trigger costs ~0.5 s of pure micro-batch
         # machinery — r5 bench spent ~22 s on the 6 censuses). The
         # files are RANGE-partitioned on ts (file k holds the k-th time
-        # tertile; FileStreamSource orders same-mtime files by path, so
-        # batches arrive in event-time order) — modeling a real
-        # time-ordered stream. Randomly-partitioned files would make
-        # every batch after the first almost entirely watermark-late:
-        # batch 1 contains the global max ts, the watermark jumps to
-        # max−2h, and the stateful operators legitimately DROP the rest.
-        # The census rows are BATCHING-INVARIANT (complete-mode over
+        # tertile and land() stamps mtimes in part order, so batches
+        # arrive in event-time order) — modeling a real time-ordered
+        # stream. Randomly-partitioned files would make every batch
+        # after the first almost entirely watermark-late: batch 1
+        # contains the global max ts, the watermark jumps to max−2h,
+        # and the stateful operators legitimately DROP the rest. The
+        # census rows are BATCHING-INVARIANT (complete-mode over
         # time-ordered files / unbounded-watermark append joins), so the
         # file count is a pure machinery knob — verified rows-identical
-        # vs the 4-file landing at sf0.001 and sf0.1.
-        landed = events.select(
-            "event_id", "ts", "user_id", "event_type", "value"
+        # vs the 4-file landing at sf0.001 and sf0.1. One file per
+        # trigger matters: without it availableNow swallows the whole
+        # directory in a single batch and the census would certify
+        # batch mode twice.
+        path, schema = census.land(landed.repartitionByRange(3, "ts"))
+        streamed, _ = census.run(
+            stream_builder(census.stream(path, schema)), output_mode
         )
-        if row_filter is not None:
-            # slice BEFORE landing (not in the builders): both sides read
-            # the same smaller files, so every JSON pass shrinks too
-            landed = landed.filter(row_filter)
-        landed.repartitionByRange(3, "ts").write.json(json_dir)
-        landed_schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
-        # maxFilesPerTrigger=1 forces one micro-batch PER FILE: without
-        # it availableNow swallows the whole directory in a single batch
-        # and the stateful operator's cross-batch state merge (window
-        # accumulation, session extension) is never actually exercised —
-        # the census would certify batch mode twice
-        stream = (
-            spark.readStream.format("json")
-            .schema(landed_schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(json_dir)
-        )
-        landed_batch = spark.read.schema(landed_schema).json(json_dir)
-        with scoped_conf(spark, CENSUS_STREAM_CONFS):
-            q = (
-                stream_builder(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        streamed = spark.table(name)
         # batch twin reads the SAME landed JSON (not the parquet source):
         # Spark's JSON timestamp format is millisecond-precision, so a
         # parquet-sourced twin diverges on any microsecond-resolution
         # per-event result (session_window starts bit it; tumbling-hour
         # starts only masked it)
-        batch = batch_builder(landed_batch)
+        batch = batch_builder(spark.read.schema(schema).json(path))
         cols = streamed.columns
         tagged = streamed.withColumn(
             "__side", F.lit(1)
@@ -229,16 +154,11 @@ def _run_parity_census(
                 F.sum(F.abs(F.col("__ns") - F.col("__nb"))), F.lit(0)
             ).alias("n_mismatch"),
         ).collect()[0]
-        equal = bool(row.n_mismatch == 0 and row.n_batch == row.n_stream)
-        return spark.createDataFrame(
-            [(row.n_batch, row.n_stream, row.n_mismatch, equal)],
-            "n_batch long, n_stream long, n_mismatch long, equal boolean",
-        )
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(tmp, ignore_errors=True)
+    equal = bool(row.n_mismatch == 0 and row.n_batch == row.n_stream)
+    return spark.createDataFrame(
+        [(row.n_batch, row.n_stream, row.n_mismatch, equal)],
+        "n_batch long, n_stream long, n_mismatch long, equal boolean",
+    )
 
 
 def stream_batch_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,62 +235,35 @@ def dedup_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is effectively unbounded (state eviction is a separate, pinned
     behavior); the batch twin is plain dropDuplicates over the same
     landed rows. Emits (n_landed, n_stream, n_batch, equal)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from ..io import load_table
 
-    events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_dedup_")
-    name = "q_stream_dedup_" + uuid.uuid4().hex[:8]
-    try:
-        base = events.select("event_id", "ts", "user_id", "event_type", "value")
-        # deterministic planted duplicates: every 5th event re-lands
-        dups = base.filter(F.col("event_id") % 5 == 0)
-        json_dir = f"{tmp}/events_json"
-        # random (round-robin) partitioning ON PURPOSE — copies of a
-        # duplicate land in different files, hence different triggers
-        # 3 round-robin files: copies of a duplicate still land in
-        # different files/triggers; with the unbounded watermark the
-        # dedup result is batching-invariant (verified rows-identical
-        # vs the 4-file landing)
-        base.unionAll(dups).repartition(3).write.json(json_dir)
-        schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
+    base = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    # deterministic planted duplicates: every 5th event re-lands
+    dups = base.filter(F.col("event_id") % 5 == 0)
+    with StreamCensus(spark, "q_stream_dedup") as census:
+        # 3 round-robin files ON PURPOSE: copies of a duplicate land in
+        # different files, hence different triggers; with the unbounded
+        # watermark the dedup result is batching-invariant (verified
+        # rows-identical vs the 4-file landing)
+        path, schema = census.land(base.unionAll(dups).repartition(3))
+        streamed, _ = census.run(
+            dedup_within_watermark(
+                census.stream(path, schema),
+                ["event_id"],
+                watermark="876000 hours",
+            ),
+            "append",
         )
-        stream = (
-            spark.readStream.format("json")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(json_dir)
-        )
-        with scoped_conf(spark, CENSUS_STREAM_CONFS):
-            q = (
-                dedup_within_watermark(
-                    stream, ["event_id"], watermark="876000 hours"
-                )
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        landed = spark.read.schema(schema).json(json_dir)
+        landed = spark.read.schema(schema).json(path)
         n_landed = landed.count()
-        n_stream = spark.table(name).count()
+        n_stream = streamed.count()
         n_batch = landed.dropDuplicates(["event_id"]).count()
-        return spark.createDataFrame(
-            [(n_landed, n_stream, n_batch, bool(n_stream == n_batch))],
-            "n_landed long, n_stream long, n_batch long, equal boolean",
-        )
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(
+        [(n_landed, n_stream, n_batch, bool(n_stream == n_batch))],
+        "n_landed long, n_stream long, n_batch long, equal boolean",
+    )
 
 
 def session_counts(
@@ -416,52 +309,31 @@ def late_data_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Only the 6-number census reaches the driver.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from ..io import load_table
 
-    events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_late_")
-    name = "q_stream_late_" + uuid.uuid4().hex[:8]
-    try:
-        json_dir = f"{tmp}/events_json"
-        events.select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        ).repartition(4, F.col("user_id") % 4).write.json(json_dir)
-        landed_schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    agg_cols = [F.window("ts", "1 hour").alias("window"), F.col("event_type")]
+    with StreamCensus(spark, "q_stream_late") as census:
+        path, schema = census.land(
+            events.repartition(4, F.col("user_id") % 4)
         )
-        stream = (
-            spark.readStream.format("json")
-            .schema(landed_schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(json_dir)
+        # only the shuffle width of census.CENSUS_STREAM_CONFS (same
+        # state-store overhead reasoning): the final no-data micro-batch
+        # finalizes windows, which is what this census counts
+        streamed, _ = census.run(
+            census.stream(path, schema)
+            .withWatermark("ts", "2 hours")
+            .groupBy(*agg_cols)
+            .agg(F.count("*").alias("n"))
+            .select(F.col("window.start").alias("ws"), "event_type", "n"),
+            "append",
+            {"spark.sql.shuffle.partitions": "8"},
         )
-        agg_cols = [F.window("ts", "1 hour").alias("window"), F.col("event_type")]
-        # 8 shuffle partitions for the stateful run — same state-store
-        # overhead reasoning as _run_parity_census
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-            q = (
-                stream.withWatermark("ts", "2 hours")
-                .groupBy(*agg_cols)
-                .agg(F.count("*").alias("n"))
-                .select(
-                    F.col("window.start").alias("ws"), "event_type", "n"
-                )
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        streamed = spark.table(name)
         batch = (
-            spark.read.schema(landed_schema)
-            .json(json_dir)
+            spark.read.schema(schema)
+            .json(path)
             .groupBy(*agg_cols)
             .agg(F.count("*").alias("n"))
             .select(F.col("window.start").alias("ws"), "event_type", "n")
@@ -488,22 +360,17 @@ def late_data_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0),
             ).alias("late_rows_lost"),
         ).collect()[0]
-        return spark.createDataFrame(
-            [
-                (
-                    row.n_batch_windows,
-                    row.n_stream_windows,
-                    row.n_common,
-                    row.n_short_common,
-                    row.late_rows_lost,
-                    bool(row.n_stream_windows < row.n_batch_windows),
-                )
-            ],
-            "n_batch_windows long, n_stream_windows long, n_common long,"
-            " n_short_common long, late_rows_lost long, withheld_tail boolean",
-        )
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(
+        [
+            (
+                row.n_batch_windows,
+                row.n_stream_windows,
+                row.n_common,
+                row.n_short_common,
+                row.late_rows_lost,
+                bool(row.n_stream_windows < row.n_batch_windows),
+            )
+        ],
+        "n_batch_windows long, n_stream_windows long, n_common long,"
+        " n_short_common long, late_rows_lost long, withheld_tail boolean",
+    )

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
+from .census import StreamCensus
 
 
 def correlate_streams(
@@ -153,23 +153,13 @@ def outer_join_report(spark, sf_dir: str):
     no-data micro-batch (it advances the watermark past the last data
     batch and flushes expired left state — with it disabled the null
     side is vacuously empty), so it scopes only the shuffle width, not
-    the whole of events.CENSUS_STREAM_CONFS.
+    the whole of census.CENSUS_STREAM_CONFS.
 
     Returns ONE census row; all comparisons run distributed.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from ..io import load_table
 
     events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q_stream_outer_join_")
-    name = "q_stream_outer_join_" + uuid.uuid4().hex[:8]
-    schema = (
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    )
 
     def split(ev):
         p = ev.filter(F.col("event_type") == "purchase").select(
@@ -189,54 +179,27 @@ def outer_join_report(spark, sf_dir: str):
         & (F.col("f_ts") > F.col("p_ts"))
         & (F.col("f_ts") <= F.col("p_ts") + F.expr("INTERVAL 30 minutes"))
     )
-    try:
-        json_dir = f"{tmp}/events_json"
-        landed = events.select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        ).filter(F.col("user_id") % 4 == 0)
-        landed.repartitionByRange(3, "ts").write.json(json_dir)
-        # FileStreamSource orders files by MODIFICATION TIME, and ties
-        # resolve in filesystem-listing order — the three tertile
-        # files are written by different tasks, so micro-batches can
-        # arrive out of event-time order: a batch carrying the global
-        # max ts jumps the watermark and every earlier row lands LATE
-        # (observed: 29-32/47 nulls, dropped matches, first-run-flaky).
-        # Range partition k writes part-0000k, so stamping strictly
-        # INCREASING mtimes in part-index order forces source order ==
-        # event-time order deterministically.
-        import os
-
-        for root, _, fs in os.walk(json_dir):
-            for fn in sorted(fs):
-                if fn.endswith(".json"):
-                    idx = int(fn.split("-")[1])
-                    os.utime(
-                        os.path.join(root, fn),
-                        (1_700_000_000 + 60 * idx,) * 2,
-                    )
-        stream = (
-            spark.readStream.format("json")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(json_dir)
+    with StreamCensus(spark, "q_stream_outer_join") as census:
+        # the three tertile files must arrive in event-time order: a
+        # batch carrying the global max ts jumps the watermark and every
+        # earlier row lands LATE (seen with unordered batches: 29-32/47
+        # nulls, dropped matches)
+        path, schema = census.land(
+            events.select("event_id", "ts", "user_id", "event_type", "value")
+            .filter(F.col("user_id") % 4 == 0)
+            .repartitionByRange(3, "ts")
         )
-        ps, fs = split(stream)
+        ps, fs = split(census.stream(path, schema))
         ps = ps.withWatermark("p_ts", "30 minutes")
         fs = fs.withWatermark("f_ts", "30 minutes")
         joined = ps.join(fs, cond, "left_outer").select(
             "p_id", "f_id", "p_user", "p_ts"
         )
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-            q = (
-                joined.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        streamed = spark.table(name).localCheckpoint(eager=True)
-        batch_ev = spark.read.schema(schema).json(json_dir)
+        streamed, _ = census.run(
+            joined, "append", {"spark.sql.shuffle.partitions": "8"}
+        )
+        streamed = streamed.localCheckpoint(eager=True)
+        batch_ev = spark.read.schema(schema).json(path)
         pb, fb = split(batch_ev)
         bj = pb.join(fb, cond, "left_outer").select(
             "p_id", "f_id", "p_user", "p_ts"
@@ -335,7 +298,3 @@ def outer_join_report(spark, sf_dir: str):
             " n_null_emitted long, n_withheld long, n_phantom long,"
             " n_withheld_outside_tail long, sound boolean",
         )
-    finally:
-        if name in [t.name for t in spark.catalog.listTables()]:
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(tmp, ignore_errors=True)

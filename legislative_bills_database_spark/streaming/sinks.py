@@ -76,23 +76,17 @@ def resume_report(spark, events: DataFrame) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
+    from .census import drain
 
     tmp = tempfile.mkdtemp(prefix="q_stream_resume_")
     stage = f"{tmp}/stage"
     in_dir = f"{tmp}/in"
     out_dir = f"{tmp}/out"
     ckpt = f"{tmp}/ckpt"
-    schema = (
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    )
+    landed = events.select("event_id", "ts", "user_id", "event_type", "value")
+    schema = landed.schema
     try:
-        (
-            events.select("event_id", "ts", "user_id", "event_type", "value")
-            .repartitionByRange(4, "ts")
-            .write.json(stage)
-        )
+        landed.repartitionByRange(4, "ts").write.json(stage)
         files = sorted(glob.glob(f"{stage}/part-*.json"))
         import os
 
@@ -110,7 +104,7 @@ def resume_report(spark, events: DataFrame) -> DataFrame:
                 .load(in_dir)
             )
             q = idempotent_parquet_sink(sdf, out_dir, ckpt)
-            q.awaitTermination(120)
+            drain(q)
             batches = rows = 0
             for p in q.recentProgress:
                 n = int(p.get("numInputRows", 0))

@@ -68,8 +68,10 @@ def test_query_parity(spark, name):
         n = df.count()
         assert n >= 0
         assert df.columns
-    # a query leaves the session's confs as it found them
+    # a query leaves the session's confs as it found them, and no
+    # stream running
     assert spark.conf.getAll == confs, name
+    assert spark.streams.active == [], name
 
 
 @pytest.mark.slow  # r15 fast-lane: measured-heavy (see pytest.ini)
