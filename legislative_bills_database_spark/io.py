@@ -9,7 +9,11 @@ and split planning from the parquet footers.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,3 +71,30 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [load_table(spark, sf_dir, n) for n in names]
+
+
+# the per-process root of scratch_dir, made on first use
+_scratch_root: str | None = None
+_scratch_lock = threading.Lock()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory for files that a query writes and reads
+    back (sink round trips, format federation, fixture PDFs).
+
+    Every call gets its own directory under one root per process,
+    ``lbd_<pid>_*`` in the temp directory (``TMPDIR``). The frames a
+    query returns read those files lazily, so nothing is deleted while
+    the process runs; the root and everything in it is removed when the
+    interpreter exits."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix=f"lbd_{os.getpid()}_")
+            atexit.register(_remove_scratch, _scratch_root, os.getpid())
+    return tempfile.mkdtemp(prefix=f"{prefix}_", dir=_scratch_root)
+
+
+def _remove_scratch(root: str, owner: int) -> None:
+    if os.getpid() == owner:  # a forked child does not own the root
+        shutil.rmtree(root, ignore_errors=True)

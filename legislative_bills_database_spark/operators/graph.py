@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_checkpoint
+from ..session import checkpoint_round, release_checkpoint
 
 
 def _orient_by_degree(und: DataFrame) -> DataFrame:
@@ -156,7 +156,6 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     try:
-        prev = ranks
         for _ in range(n_iter):
             # 1-row aggregate, broadcast-joined into every row: keeps the
             # dangling correction inside the single per-iteration job
@@ -170,7 +169,7 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("w")).alias("inflow"))
             )
-            ranks = (
+            ranks = checkpoint_round(
                 ranks.select("node", "dangling")
                 .join(contribs, F.col("node") == contribs.dst, "left")
                 .crossJoin(F.broadcast(dmass))
@@ -182,14 +181,9 @@ def pagerank(
                         + F.lit(damping) * F.col("__dmass") / F.lit(float(n_nodes))
                         + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
                     ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)  # truncate per-iteration lineage
+                ),
+                replaces=ranks,
             )
-            # the new checkpoint is eager (materialized above), so the
-            # previous iteration's blocks can be released now — without
-            # this, executor storage accumulates O(n_iter) rank copies
-            release_checkpoint(prev)
-            prev = ranks
         return ranks.select("node", "rank")
     finally:
         edges_w.unpersist()
@@ -221,13 +215,12 @@ def bfs_hops(
     d+1, and those first two level sets ARE the previous frontiers) —
     so each round anti-joins two BOUNDED frontier frames, never the
     whole accumulated distance table: per-round work is O(frontier
-    neighborhood), not O(visited). One ``localCheckpoint`` per round
-    (+ release two rounds back) keeps plan depth and executor storage
-    O(1); the result assembles once at the end as a union of the
-    materialized per-level frontiers. Rounds ≤ min(diameter, max_hops);
-    the convergence probe is the frontier's emptiness, O(1) driver
-    rows. True BFS reaches each node first at its minimum distance, so
-    no min-aggregation pass is needed.
+    neighborhood), not O(visited). One eager checkpoint per round keeps
+    plan depth O(1); the result assembles once at the end as a union of
+    the materialized per-level frontiers, so every level is kept.
+    Rounds ≤ min(diameter, max_hops); the convergence probe is the
+    frontier's emptiness, O(1) driver rows. True BFS reaches each node
+    first at its minimum distance, so no min-aggregation pass is needed.
 
     ``sym_layout``: optional CALLER-OWNED symmetric adjacency layout
     (see :func:`multi_source_bfs` — same contract); skips the build
@@ -262,12 +255,12 @@ def bfs_hops(
         .localCheckpoint(eager=True)
     )
     levels: list[DataFrame] = [f0]
+    empty = None  # the round that found no new node
     try:
         # r14 optimization: the emptiness probe rides the eager
-        # checkpoint as an observe() metric (the k_core trick) — one
-        # job per round instead of checkpoint + isEmpty probe.
-        from pyspark.sql import Observation
-
+        # checkpoint as an observed count (the k_core trick) — one job
+        # per round instead of checkpoint + isEmpty probe. Every level
+        # is kept (the final union reads them), so no round replaces one.
         prev, cur = None, f0
         for _h in range(1, max_hops + 1):
             nxt = (
@@ -278,17 +271,13 @@ def bfs_hops(
             )
             if prev is not None:
                 nxt = nxt.join(prev, "node", "left_anti")
-            obs = Observation()
-            nxt = nxt.observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True)
-            if obs.get["n"] == 0:
-                release_checkpoint(nxt)
+            nxt, seen = checkpoint_round(nxt, F.count(F.lit(1)).alias("n"))
+            if seen["n"] == 0:
+                empty = nxt
                 break
             levels.append(nxt)
-            # levels[-3] is no longer needed for anti-joins, but IS part
-            # of the final union — keep its blocks until assembly below
             prev, cur = cur, nxt
+        release_checkpoint(empty)
         out = levels[0].select(
             "node", F.lit(0).cast("long").alias("dist")
         )
@@ -342,7 +331,6 @@ def label_propagation(
     labels = nodes.select(
         "node", F.col("node").alias("label")
     ).localCheckpoint(eager=True)
-    prev = labels
     try:
         for _ in range(n_iter):
             neighbor_votes = sym.join(
@@ -352,18 +340,16 @@ def label_propagation(
             counts = votes.groupBy("node", "label").agg(
                 F.count(F.lit(1)).alias("n")
             )
-            labels = (
+            labels = checkpoint_round(
                 counts.groupBy("node")
                 .agg(
                     F.min(
                         F.struct((-F.col("n")).alias("neg"), F.col("label"))
                     ).alias("best")
                 )
-                .select("node", F.col("best.label").alias("label"))
-                .localCheckpoint(eager=True)
+                .select("node", F.col("best.label").alias("label")),
+                replaces=labels,
             )
-            release_checkpoint(prev)
-            prev = labels
         return labels
     finally:
         sym.unpersist()
@@ -395,7 +381,7 @@ def k_core(
     peeling it removes those edges, so the count strictly decreases
     until the fixpoint. (An observation on the WEAK-node subtree
     itself breaks: the two anti-join sides evaluate it twice in one
-    action, which Observation.get rejects — the count must sit
+    action, which an observed metric rejects — the count must sit
     directly above the checkpointed output, evaluated exactly once.)
     Converges in ≤ max_iter rounds or raises; iterations are bounded
     by #nodes in the worst case (a chain peels one end per round);
@@ -410,24 +396,16 @@ def k_core(
 
     Returns (node, degree) of surviving nodes with their core degrees.
     """
-    from pyspark.sql import Observation
-
-    def _ckpt_counted(df: DataFrame):
-        obs = Observation()
-        out = df.observe(
-            obs, F.count(F.lit(1)).alias("edges")
-        ).localCheckpoint(eager=True)
-        return out, obs.get["edges"]
-
-    und, n_edges = _ckpt_counted(
+    edge_count = F.count(F.lit(1)).alias("edges")
+    und, seen = checkpoint_round(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        edge_count,
     )
-    prev = und
     for _ in range(max_iter):
         deg = (
             und.select(F.col("a").alias("n"))
@@ -438,21 +416,21 @@ def k_core(
         weak = deg.filter(F.col("degree") < k)
         wa = weak.select(F.col("n").alias("a"))
         wb = weak.select(F.col("n").alias("b"))
-        new_und, new_edges = _ckpt_counted(
-            und.join(wa, "a", "left_anti").join(wb, "b", "left_anti")
+        before = seen["edges"]
+        und, seen = checkpoint_round(
+            und.join(wa, "a", "left_anti").join(wb, "b", "left_anti"),
+            edge_count,
+            replaces=und,
         )
-        release_checkpoint(prev)
-        prev = new_und
-        if new_edges == n_edges:
+        if seen["edges"] == before:
             # the round peeled nothing ⟹ no weak nodes remained; the
-            # degrees on new_und ARE the k-core degrees
+            # degrees on und ARE the k-core degrees
             return (
-                new_und.select(F.col("a").alias("node"))
-                .union(new_und.select("b"))
+                und.select(F.col("a").alias("node"))
+                .union(und.select("b"))
                 .groupBy("node")
                 .agg(F.count(F.lit(1)).alias("degree"))
             )
-        und, n_edges = new_und, new_edges
     raise RuntimeError(
         f"k_core did not reach a fixpoint in {max_iter} rounds (deep peel "
         f"chains — raise max_iter)."
@@ -531,9 +509,9 @@ def multi_source_bfs(
     arithmetic) — this operator targets bounded landmark panels
     (sampled closeness, blast-radius probes); all-sources BFS is APSP
     and needs a different algorithm. The panel is collected to the
-    driver (bounded by construction) to mint seed ids. Per-round
-    localCheckpoint + release keeps lineage and executor storage O(1)
-    in rounds.
+    driver (bounded by construction) to mint seed ids. A per-round eager
+    checkpoint keeps lineage O(1) in rounds; the levels are kept for
+    the final union.
 
     ``sym_layout``: an optional CALLER-OWNED symmetric (src, dst)
     adjacency layout, already deduplicated, src-partitioned and
@@ -622,10 +600,10 @@ def _msbfs_mask_chunk(
         [(s, 1 << i) for i, s in enumerate(chunk)], mask_schema
     ).localCheckpoint(eager=True)
     levels: list[DataFrame] = [f0]
+    empty = None  # the round that reached no new (node, seed)
     # r14 optimization: emptiness probe rides the eager checkpoint as
-    # an observe() metric — one job per round instead of two.
-    from pyspark.sql import Observation
-
+    # an observed count — one job per round instead of two. Every level
+    # is kept for the final union, so no round replaces one.
     prev, cur = None, f0
     for _h in range(1, max_hops + 1):
         cand = (
@@ -635,8 +613,7 @@ def _msbfs_mask_chunk(
         )
         vis = cur if prev is None else cur.unionByName(prev)
         vn = vis.groupBy("node").agg(F.bit_or("mask").alias("vmask"))
-        obs = Observation()
-        nxt = (
+        nxt, seen = checkpoint_round(
             cand.join(vn, "node", "left")
             .select(
                 "node",
@@ -646,15 +623,15 @@ def _msbfs_mask_chunk(
                 )
                 .alias("mask"),
             )
-            .filter(F.col("mask") != 0)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .filter(F.col("mask") != 0),
+            F.count(F.lit(1)).alias("n"),
         )
-        if obs.get["n"] == 0:
-            release_checkpoint(nxt)
+        if seen["n"] == 0:
+            empty = nxt
             break
         levels.append(nxt)
         prev, cur = cur, nxt
+    release_checkpoint(empty)
     out = levels[0].select("node", "mask", F.lit(0).cast("long").alias("dist"))
     for d, frame in enumerate(levels[1:], start=1):
         out = out.union(
@@ -731,14 +708,12 @@ def shortest_paths(
                     (F.col("dist") + F.col("w")).alias("dist"),
                 )
             )
-            nxt = (
+            dist = checkpoint_round(
                 dist.unionByName(relaxed)
                 .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-                .localCheckpoint(eager=True)
+                .agg(F.min("dist").alias("dist")),
+                replaces=dist,
             )
-            release_checkpoint(dist)
-            dist = nxt
         return dist
     finally:
         e.unpersist()
@@ -775,34 +750,22 @@ def k_core_fixed(
     the same partial result on both engine and oracle sides (ADVICE
     r7): at a scale where the peel needs more than ``rounds`` rounds,
     the flag flips to 0 and the certificate says so. Cost: ZERO extra
-    jobs — the per-round edge counts ride along as ``observe()``
-    metrics on the eager-checkpoint actions the loop already runs
-    (r8 shipped this as two extra count jobs, a 1.53× bench
-    regression; the observation form recovers it).
+    jobs — every round's edge count is observed on the eager checkpoint
+    the loop already runs, with or without the flag (r8 shipped this as
+    two extra count jobs, a 1.53× bench regression; the observed form
+    recovers it).
     """
-    from pyspark.sql import Observation
-
-    def _ckpt(df: DataFrame, counts: list | None) -> DataFrame:
-        if counts is None:
-            return df.localCheckpoint(eager=True)
-        obs = Observation()
-        out = df.observe(
-            obs, F.count(F.lit(1)).alias("edges")
-        ).localCheckpoint(eager=True)
-        counts.append(obs.get["edges"])
-        return out
-
-    edge_counts: list | None = [] if with_converged else None
-    und = _ckpt(
+    edge_count = F.count(F.lit(1)).alias("edges")
+    und, seen = checkpoint_round(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct(),
-        edge_counts,
+        edge_count,
     )
-    prev = und
+    edge_counts = [seen["edges"]]
     for _ in range(rounds):
         deg = (
             und.select(F.col("a").alias("n"))
@@ -820,17 +783,12 @@ def k_core_fixed(
         weak = deg.filter(F.col("degree") < k)
         wa = weak.select(F.col("n").alias("a"))
         wb = weak.select(F.col("n").alias("b"))
-        und = _ckpt(
+        und, seen = checkpoint_round(
             und.join(wa, "a", "left_anti").join(wb, "b", "left_anti"),
-            edge_counts,
+            edge_count,
+            replaces=und,
         )
-        release_checkpoint(prev)
-        prev = und
-    converged = (
-        edge_counts is None
-        or len(edge_counts) < 2
-        or edge_counts[-1] == edge_counts[-2]
-    )
+        edge_counts.append(seen["edges"])
     out = (
         und.select(F.col("a").alias("n"))
         .union(und.select("b"))
@@ -839,6 +797,7 @@ def k_core_fixed(
         .withColumnRenamed("n", "node")
     )
     if with_converged:
+        converged = len(edge_counts) < 2 or edge_counts[-1] == edge_counts[-2]
         out = out.withColumn(
             "converged", F.lit(1 if converged else 0).cast("long")
         )
@@ -936,11 +895,11 @@ def betweenness_sampled(
             .join(sym, lvl[k - 1]["node"] == sym["src"])
             .select("seed", F.col("dst").alias("node"), "sigma")
         )
-        lvl[k] = (
+        # every level is kept: the backward pass reads them all
+        lvl[k] = checkpoint_round(
             cand.join(visited, ["seed", "node"], "left_anti")
             .groupBy("seed", "node")
             .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .localCheckpoint(eager=True)
         )
         visited = visited.unionByName(lvl[k].select("seed", "node"))
     delta: dict[int, DataFrame] = {
@@ -1129,14 +1088,12 @@ def longest_paths_dag(
                 F.col("dst").alias("node"),
                 (F.col("dist") + F.col("w")).alias("dist"),
             )
-            nxt = (
+            dist = checkpoint_round(
                 dist.unionByName(relaxed)
                 .groupBy("node")
-                .agg(F.max("dist").alias("dist"))
-                .localCheckpoint(eager=True)
+                .agg(F.max("dist").alias("dist")),
+                replaces=dist,
             )
-            release_checkpoint(dist)
-            dist = nxt
         return dist
     finally:
         e.unpersist()
@@ -1173,7 +1130,7 @@ def boruvka_msf(
     hand-rolled pointer-jumping contraction was measured ~2.5×-per-
     iteration SLOWER here despite eager localCheckpoints (Spark 4.1
     re-executes the self-join chain's history inside each checkpoint
-    job); the shared operator's Observation-metered loop does not
+    job); the shared operator's observed-metric loop does not
     exhibit the pathology — reuse over re-derivation.
 
     Per outer round: two label joins over the edge list, one
@@ -1215,10 +1172,9 @@ def boruvka_msf(
     # accumulates as a lazy union of the materialized selections
     # (≤ |V|−1 rows total — result-sized) instead of re-checkpointing
     # a growing union every round. ~3 fewer jobs per round.
-    from pyspark.sql import Observation
-
     picks: list[DataFrame] = []
     converged = False
+    cross = None
     try:
         for _ in range(max_rounds):
             cs = lab.select(
@@ -1227,16 +1183,13 @@ def boruvka_msf(
             cd = lab.select(
                 F.col("node").alias("dst"), F.col("comp").alias("cd")
             )
-            obs = Observation()
-            cross = (
+            cross, seen = checkpoint_round(
                 e.join(cs, "src")
                 .join(cd, "dst")
-                .filter(F.col("cs") != F.col("cd"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+                .filter(F.col("cs") != F.col("cd")),
+                F.count(F.lit(1)).alias("n"),
             )
-            if obs.get["n"] == 0:
-                release_checkpoint(cross)
+            if seen["n"] == 0:
                 converged = True
                 break
             cand = cross.select(
@@ -1268,17 +1221,14 @@ def boruvka_msf(
             roots = connected_components(
                 selpairs, comps, id_col="c", label_col="root"
             )
-            newlab = (
+            lab = checkpoint_round(
                 lab.join(roots, lab.comp == roots.c, "left")
                 .select(
                     "node", F.coalesce("root", "comp").alias("comp")
-                )
-                .localCheckpoint(eager=True)
+                ),
+                replaces=[lab, cross],
             )
             picks.append(sel)
-            release_checkpoint(lab)
-            release_checkpoint(cross)
-            lab = newlab
         if not converged:
             # the final round's contraction may have finished the job;
             # recheck before declaring the forest partial
@@ -1303,6 +1253,8 @@ def boruvka_msf(
                 )
     finally:
         release_checkpoint(lab)
+        if converged:
+            release_checkpoint(cross)  # the empty last round
         e.unpersist()
     forest = spark.createDataFrame([], "src long, dst long, w long")
     for sel in picks:
@@ -1360,8 +1312,6 @@ def greedy_maximal_matching(
     same order as the result itself — so holding their blocks to the
     end costs what the old single matching checkpoint cost.
     """
-    from pyspark.sql import Observation
-
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -1405,25 +1355,21 @@ def greedy_maximal_matching(
                 .unionByName(sel.select(F.col("dst").alias("node")))
                 .distinct()
             )
-            obs = Observation()
-            nxt = (
+            e, seen = checkpoint_round(
                 e.join(
                     matched.select(F.col("node").alias("src")),
                     "src",
                     "left_anti",
-                )
-                .join(
+                ).join(
                     matched.select(F.col("node").alias("dst")),
                     "dst",
                     "left_anti",
-                )
-                .observe(obs, F.count(F.lit(1)).alias("edges"))
-                .localCheckpoint(eager=True)
+                ),
+                F.count(F.lit(1)).alias("edges"),
+                replaces=e,
             )
-            n_edges = obs.get["edges"]
+            n_edges = seen["edges"]
             picks.append(sel)
-            release_checkpoint(e)
-            e = nxt
         if not converged and n_edges != 0:
             raise RuntimeError(
                 f"greedy_maximal_matching: edges remain after "
@@ -1506,8 +1452,6 @@ def luby_mis(
     # derived from it); the MIS accumulates as a lazy union of the
     # materialized winner frames (≤ |V| rows total — result-sized)
     # instead of re-checkpointing a growing union every round.
-    from pyspark.sql import Observation
-
     winner_frames: list[DataFrame] = []
     n_active = None  # None = unknown before the first round
     converged = False
@@ -1546,26 +1490,21 @@ def luby_mis(
                 )
                 .distinct()
             )
-            obs = Observation()
-            nxt_active = (
-                active.join(dead, "node", "left_anti")
-                .observe(obs, F.count(F.lit(1)).alias("active"))
-                .localCheckpoint(eager=True)
+            nxt_active, seen = checkpoint_round(
+                active.join(dead, "node", "left_anti"),
+                F.count(F.lit(1)).alias("active"),
             )
-            n_active = obs.get["active"]
+            n_active = seen["active"]
             winner_frames.append(winners)
-            nxt_e = (
+            e = checkpoint_round(
                 e.join(
                     dead.select(F.col("node").alias("src")), "src", "left_anti"
-                )
-                .join(
+                ).join(
                     dead.select(F.col("node").alias("dst")), "dst", "left_anti"
-                )
-                .localCheckpoint(eager=True)
+                ),
+                replaces=[active, e],
             )
-            release_checkpoint(active)
-            release_checkpoint(e)
-            active, e = nxt_active, nxt_e
+            active = nxt_active
         if not converged and n_active != 0:
             raise RuntimeError(
                 f"luby_mis: active nodes remain after {max_rounds} "

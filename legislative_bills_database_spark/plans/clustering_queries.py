@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..session import memo
+from ..session import checkpoint_round, memo
 from .registry import query
 
 _KM_K = 4
@@ -152,11 +152,12 @@ def _km_sweeps(spark, sf_dir):
         .select("cid", "dim", F.col("e").alias("c"))
         .localCheckpoint(eager=True)
     )
-    prev = cent
+    # the sweep before the last is kept (its rows are returned with the
+    # last's), so a new sweep replaces the one two back
+    prev = None
     for _ in range(_KM_ROUNDS):
-        prev = cent
         assign = _km_assign(ex, cent)
-        cent = (
+        prev, cent = cent, checkpoint_round(
             ex.join(assign, "vec_id")
             .groupBy("cid", "dim")
             .agg(
@@ -165,8 +166,8 @@ def _km_sweeps(spark, sf_dir):
                     " THEN -((-SUM(e)) div COUNT(*))"
                     " ELSE SUM(e) div COUNT(*) END AS BIGINT)"
                 ).alias("c")
-            )
-            .localCheckpoint(eager=True)  # pin the sweep; flat lineage
+            ),
+            replaces=prev,
         )
     return (
         [(r["cid"], r["dim"], r["c"]) for r in prev.collect()],

@@ -15,7 +15,7 @@ from ..functions import compat as C
 from ..functions import text as T
 from ..operators import corpus as Co
 from ..functions.vectors import sql_cosine
-from ..io import load_table, load_tables
+from ..io import load_table, load_tables, scratch_dir
 from ..operators.dedup import (
     dedup_by_near_duplicates,  # noqa: F401  (re-export for pipelines)
     embedding_neardup_pairs,
@@ -1091,9 +1091,7 @@ def q_schema_evolution(spark, sf_dir):
     extra pass over file metadata, nothing over data); pinning the
     reconciled result against a relational oracle proves old files stay
     readable untouched."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="lbd_schemaevo_") + "/docs"
+    base = scratch_dir("schemaevo") + "/docs"
     docs = load_table(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") < 250).select("doc_id", "lang").write.parquet(
         base
@@ -1153,14 +1151,12 @@ def q_partitioned_sink(spark, sf_dir):
     that prunes whole directories before any file opens — the layout
     move that turns a 100 TB scan into a per-partition read. Pruning is
     pinned in tests/test_plan_audit.py (PartitionFilters on the scan)."""
-    import tempfile
-
     from ..sources.sinks import write_partitioned_parquet
 
     docs = load_table(spark, sf_dir, "documents")
     path = write_partitioned_parquet(
         docs.select("doc_id", "n_chars", "lang"),
-        tempfile.mkdtemp(prefix="lbd_part_") + "/documents_by_lang",
+        scratch_dir("part") + "/documents_by_lang",
         partition_by=["lang"],
         sort_within=["doc_id"],
     )
@@ -1211,11 +1207,10 @@ def q_compact_files(spark, sf_dir):
     op that keeps scan listing costs flat at 100 TB
     (sources/sinks.compact_parquet)."""
     import glob
-    import tempfile
 
     from ..sources.sinks import compact_parquet
 
-    base = tempfile.mkdtemp(prefix="lbd_compact_")
+    base = scratch_dir("compact")
     frag, packed = f"{base}/frag", f"{base}/packed"
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -1319,12 +1314,10 @@ def q_shard_manifest(spark, sf_dir):
     relational oracle proves the written shards carry exactly the
     assigned rows — a lost, duplicated, or corrupted row flips the
     digest."""
-    import tempfile
-
     from ..sources.sinks import shard_export
 
     docs = load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="lbd_shards_") + "/docs"
+    path = scratch_dir("shards") + "/docs"
     return shard_export(
         spark, docs, path, n_shards=8, id_col="doc_id",
         digest_cols=["doc_id", "text"],
@@ -1351,11 +1344,9 @@ def q_upsert_partition(spark, sf_dir):
     directory is swapped, other partitions' files are untouched. The
     read-back census must match an oracle that applies the update
     relationally, proving the swap replaced exactly one partition."""
-    import tempfile
-
     from ..sources.sinks import upsert_partitions
 
-    base = tempfile.mkdtemp(prefix="lbd_upsert_") + "/orders"
+    base = scratch_dir("upsert") + "/orders"
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
@@ -1387,9 +1378,7 @@ def q_orc_roundtrip(spark, sf_dir):
     as ORC (Spark's second columnar builtin — zlib striped, predicate-
     pushdown-capable like parquet), read them back, and verify content
     parity against the parquet-backed oracle."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="lbd_orc_") + "/docs"
+    path = scratch_dir("orc") + "/docs"
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )

@@ -21,7 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.compat import exact_sum, sql_exact_sum
-from ..io import load_table
+from ..io import load_table, scratch_dir
 from ..operators.aggregates import pivot_count, row_total
 from ..operators.joins import (
     SQL_SESSION_LABEL,
@@ -496,15 +496,13 @@ def q_csv_sink(spark, sf_dir):
     WRITTEN via sources.sinks.write_csv_report (to a temp dir — the write
     itself is part of the exercised operator), then returned for the
     value check."""
-    import tempfile
-
     from ..sources.sinks import write_csv_report
 
     orders = load_table(spark, sf_dir, "orders")
     out = orders.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
-    write_csv_report(out, tempfile.mkdtemp(prefix="lbd_sink_"), "orders_f")
+    write_csv_report(out, scratch_dir("sink"), "orders_f")
     return out
 
 
@@ -526,12 +524,11 @@ def q_pdf_text_source(spark, sf_dir):
     PDF is written to a temp dir, scanned via the binaryFile source,
     extracted by the pandas UDF and exploded to lines — the full
     distributed extraction path, hash-verified against the known content."""
-    import tempfile
     from pathlib import Path
 
     from ..sources.extract import make_simple_pdf, read_pdf_lines
 
-    d = tempfile.mkdtemp(prefix="lbd_pdf_")
+    d = scratch_dir("pdf")
     Path(d, "2021_Budget_Bills.pdf").write_bytes(make_simple_pdf(_PDF_LINES))
     return read_pdf_lines(spark, f"{d}/*.pdf").filter(
         F.col("line") != ""
@@ -553,12 +550,11 @@ def q_html_text_source(spark, sf_dir):
     """HTML text source (legiscan_main.R:212): markup stripped, entities
     decoded, script/style dropped — binaryFile scan + pandas-UDF
     extraction, hash-verified against the known text content."""
-    import tempfile
     from pathlib import Path
 
     from ..sources.extract import read_html_docs
 
-    d = tempfile.mkdtemp(prefix="lbd_html_")
+    d = scratch_dir("html")
     Path(d, "2021_AB128.html").write_text(_HTML_DOC)
     return read_html_docs(spark, f"{d}/*.html").select("text")
 

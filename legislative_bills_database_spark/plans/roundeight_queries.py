@@ -1249,7 +1249,7 @@ def q_hits_scores(spark, sf_dir):
     its key, two map-side-combined sums, and two 1-row max aggregates
     that ride broadcast — the loop is O(diameter-free), always 4
     rounds, so the chained-CTE oracle replays it verbatim."""
-    from ..operators.graph import release_checkpoint
+    from ..session import checkpoint_round
     from .roundseven_queries import _cs_edges
 
     ce = _cs_edges(spark, sf_dir)
@@ -1258,8 +1258,7 @@ def q_hits_scores(spark, sf_dir):
         .distinct()
         .select("cust", F.lit(_HITS_SCALE).cast("long").alias("h"))
     )
-    a_final = None
-    prev_h = None
+    aq = None
     for _r in range(_HITS_ROUNDS):
         ar = (
             ce.join(h, "cust")
@@ -1267,28 +1266,29 @@ def q_hits_scores(spark, sf_dir):
             .agg(F.sum("h").cast("long").alias("a"))
         )
         amax = ar.agg(F.max("a").alias("am"))
-        aq = ar.crossJoin(F.broadcast(amax)).select(
-            "supp",
-            F.expr(f"CAST(a * {_HITS_SCALE} DIV am AS LONG)").alias("a"),
-        ).localCheckpoint(eager=True)
-        if a_final is not None:
-            release_checkpoint(a_final)  # only the last aq survives
+        aq = checkpoint_round(  # only the last aq survives
+            ar.crossJoin(F.broadcast(amax)).select(
+                "supp",
+                F.expr(f"CAST(a * {_HITS_SCALE} DIV am AS LONG)").alias("a"),
+            ),
+            replaces=aq,
+        )
         hr = (
             ce.join(aq, "supp")
             .groupBy("cust")
             .agg(F.sum("a").cast("long").alias("h"))
         )
         hmax = hr.agg(F.max("h").alias("hm"))
-        h = hr.crossJoin(F.broadcast(hmax)).select(
-            "cust",
-            F.expr(f"CAST(h * {_HITS_SCALE} DIV hm AS LONG)").alias("h"),
-        ).localCheckpoint(eager=True)
-        if prev_h is not None:
-            release_checkpoint(prev_h)
-        prev_h = h
-        a_final = aq
+        # round 1 replaces the lazy start vector: nothing to release
+        h = checkpoint_round(
+            hr.crossJoin(F.broadcast(hmax)).select(
+                "cust",
+                F.expr(f"CAST(h * {_HITS_SCALE} DIV hm AS LONG)").alias("h"),
+            ),
+            replaces=h,
+        )
     return (
-        a_final.select("supp", F.col("a").alias("auth_ppm"))
+        aq.select("supp", F.col("a").alias("auth_ppm"))
         .orderBy(F.col("auth_ppm").desc(), "supp")
         .limit(15)
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..session import checkpoint_round
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1290,16 +1291,18 @@ def q_bradley_terry(spark, sf_dir):
             "brand",
             F.expr(f"(wins * {s2}) div GREATEST(d, 1)").alias("p"),
         )
-        nxt = u.select(
-            "brand",
-            F.expr(
-                f"(p * (COUNT(*) OVER ()) * {_BT_S})"
-                " div (SUM(p) OVER ())"
-            )
-            .cast("long")
-            .alias("piq"),
-        ).localCheckpoint(eager=True)
-        pi = nxt
+        pi = checkpoint_round(
+            u.select(
+                "brand",
+                F.expr(
+                    f"(p * (COUNT(*) OVER ()) * {_BT_S})"
+                    " div (SUM(p) OVER ())"
+                )
+                .cast("long")
+                .alias("piq"),
+            ),
+            replaces=pi,
+        )
     return wtot.join(pi, "brand").select(
         "brand", "wins", "n_comp", F.col("piq").alias("strength_q")
     )

@@ -19,8 +19,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.compat import exact_sum, sql_exact_sum
-from ..io import load_table, load_tables
-from ..session import memo, scoped_conf
+from ..io import load_table, load_tables, scratch_dir
+from ..session import checkpoint_round, memo, scoped_conf
 from .registry import query
 
 
@@ -874,14 +874,7 @@ def q_xml_roundtrip(spark, sf_dir):
     (schema inference on XML costs a full extra pass at scale — never
     infer on 100 TB), and content-verified against the parquet-backed
     oracle."""
-    import os
-    import tempfile
-
-    # fixed per-process path + overwrite: a fresh mkdtemp per invocation
-    # leaked one temp dir per bench/preflight run (ADVICE r5)
-    path = os.path.join(
-        tempfile.gettempdir(), f"lbd_xml_{os.getuid()}", "nation"
-    )
+    path = scratch_dir("xml") + "/nation"
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1454,15 +1447,15 @@ def q_markov_stationary(spark, sf_dir):
         F.lit(100_000_000 // n_states).cast("long").alias("v"),
     ).localCheckpoint(eager=True)
     for _ in range(10):
-        v = (
+        v = checkpoint_round(
             v.join(pint, v.state == pint.from_type)
             .select(
                 F.col("to_type").alias("state"),
                 F.expr("v * pi div 1000000").alias("vv"),
             )
             .groupBy("state")
-            .agg(F.sum("vv").cast("long").alias("v"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("vv").cast("long").alias("v")),
+            replaces=v,
         )
     tot_v = v.agg(F.sum("v").alias("tv"))
     return v.join(F.broadcast(tot_v)).select(

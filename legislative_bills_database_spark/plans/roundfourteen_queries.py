@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..session import scoped_conf
 from .registry import query
+from .roundsix_queries import _int_pagerank, _sql_int_pagerank
 from .roundthirteen_queries import (
     _FS_MATCH,
     _FS_SCORE_DUCK,
@@ -2129,68 +2130,13 @@ def q_bitemporal_asof(spark, sf_dir):
 # phase 126: personalized PageRank (seed-restart fixed-point, exact)
 # ---------------------------------------------------------------------------
 
-_PPR_TOTAL = 100_000_000
-_PPR_DAMP_PPM = 850_000
-_PPR_ROUNDS = 8
 _PPR_SEED_MOD = 10  # seeds: node % 10 == 0
 
 
-def _sql_ppr(rounds: int) -> str:
-    seed = f"node % {_PPR_SEED_MOD} = 0"
-    steps = [
-        f"""
-    p0 AS (
-      SELECT node,
-             CAST(CASE WHEN {seed}
-                  THEN {_PPR_TOTAL} // (SELECT n FROM nseed)
-                  ELSE 0 END AS BIGINT) AS v
-      FROM nodes
-    )"""
-    ]
-    for i in range(1, rounds + 1):
-        steps.append(f"""
-    p{i} AS (
-      SELECT n.node,
-             CAST(CASE WHEN n.node % {_PPR_SEED_MOD} = 0
-                  THEN (SELECT b FROM baseseed) ELSE 0 END
-                  + COALESCE(SUM(((r.v * {_PPR_DAMP_PPM}) // 1000000)
-                                 // w.deg), 0) AS BIGINT) AS v
-      FROM nodes n
-      LEFT JOIN ws w ON w.dst = n.node
-      LEFT JOIN p{i - 1} r ON r.node = w.src
-      GROUP BY 1
-    )""")
-    return f"""
-    WITH e AS (
-      SELECT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      WHERE a.l_orderkey % 97 = 0 GROUP BY 1, 2
-    ),
-    sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-    edges AS (SELECT DISTINCT src, dst FROM sym),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    nseed AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes WHERE {seed}
-    ),
-    outdeg AS (
-      SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY 1
-    ),
-    ws AS (SELECT e2.src, e2.dst, d.deg
-           FROM edges e2 JOIN outdeg d USING (src)),
-    baseseed AS (
-      SELECT CAST((({_PPR_TOTAL} // (SELECT n FROM nseed)) * 150000)
-                  // 1000000 AS BIGINT) AS b
-    ),
-    {",".join(steps)}
-    SELECT node, v AS ppr_scaled,
-           ROUND(CAST(v AS DOUBLE) / (SELECT SUM(v) FROM p{rounds}), 6)
-             AS ppr
-    FROM p{rounds} WHERE v > 0
-    """
-
-
-@query("q_ppr", _sql_ppr(_PPR_ROUNDS))
+@query(
+    "q_ppr",
+    _sql_int_pagerank(f"{{node}} % {_PPR_SEED_MOD} = 0", "ppr", " WHERE v > 0"),
+)
 def q_ppr(spark, sf_dir):
     """Personalized PageRank (seed-restart random walk) over the
     co-purchase graph — q_pagerank_exact's recommendation-flavored
@@ -2200,78 +2146,15 @@ def q_ppr(spark, sf_dir):
     graph-based recommendation and local community scoring, where
     global PageRank measures overall centrality.
 
-    Same hash-certification discipline as q_pagerank_exact: rank mass
-    quantized to 1e8 BIGINTs, damping in ppm, eight power sweeps of
-    integer floor-divided gathers, the DuckDB twin a chained CTE —
-    bit-identical in any engine and summation order. The symmetric
-    graph has no dangling nodes, so walk mass only leaks through
-    floor-division and the restart term re-concentrates on seeds;
-    nodes never reached (v = 0 — unreachable from every seed under 8
-    sweeps) drop from the output in both engines.
-
-    Scale shape: per-round one key-join of the rank vector against
-    the (src, dst, deg) edge list + one sum — the distributed PageRank
-    shape; rounds checkpoint eagerly (O(1) plan depth); seed count
-    scales with the graph, the walk frontier with the seeds."""
-    from ..session import release_checkpoint
-
-    from .roundfive_queries import _copurchase_edges
-
-    canon = _copurchase_edges(spark, sf_dir).select("src", "dst")
-    edges = canon.unionByName(
-        canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    outdeg = edges.groupBy("src").agg(
-        F.count("*").cast("long").alias("deg")
-    )
-    # r14 optimization (guide §2.3): ws and nodes are EAGER checkpoints
-    # computed once — the lazy nodes distinct used to re-run an
-    # edge-grain shuffle inside every round's checkpoint job. A
-    # repartition("src").persist() layout (the pagerank discipline) was
-    # measured 2.3× SLOWER on this loop shape (OPTIMIZATION_r14
-    # negative results), so plain checkpoints stay; the per-round join
-    # re-exchanges ws, which is the cheaper trade here.
-    ws = edges.join(outdeg, "src").localCheckpoint(eager=True)
-    nodes = (
-        ws.select(F.col("src").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    is_seed = F.col("node") % _PPR_SEED_MOD == 0
-    n_seeds = nodes.filter(is_seed).count()  # bounded: |sampled parts|
-    seed_v = _PPR_TOTAL // n_seeds
-    seed_base = (seed_v * 150_000) // 1_000_000
-    v = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(seed_v)).otherwise(0).cast("long").alias("v"),
-    ).localCheckpoint(eager=True)
-    for _ in range(_PPR_ROUNDS):
-        contrib = (
-            v.join(ws, v.node == ws.src)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"((v * {_PPR_DAMP_PPM}) div 1000000) div deg"
-                ).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").cast("long").alias("cs"))
-        )
-        new_v = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(seed_base)).otherwise(0)
-                    + F.coalesce(F.col("cs"), F.lit(0))
-                )
-                .cast("long")
-                .alias("v"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        release_checkpoint(v)
-        v = new_v
+    Same loop as q_pagerank_exact (:func:`_int_pagerank`, the restart
+    term on the seeds only) and the same hash certification against a
+    chained-CTE DuckDB twin. The symmetric graph has no dangling nodes,
+    so walk mass only leaks through floor-division and the restart term
+    re-concentrates on seeds; nodes never reached (v = 0 — unreachable
+    from every seed under 8 sweeps) drop from the output in both
+    engines. Seed count scales with the graph, the walk frontier with
+    the seeds."""
+    v = _int_pagerank(spark, sf_dir, F.col("node") % _PPR_SEED_MOD == 0)
     v = v.filter(F.col("v") > 0)
     tot = v.agg(F.sum("v").alias("tv"))
     return v.join(F.broadcast(tot)).select(

@@ -30,6 +30,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_tables
+from ..session import checkpoint_round
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -2616,7 +2617,7 @@ def q_mmr_select(spark, sf_dir):
             .limit(1)
             .select("vec_id", "rel", F.lit(k).cast("long").alias("pick"))
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = checkpoint_round(sel.unionByName(pick), replaces=sel)
     return sel.select("pick", "vec_id", "rel").orderBy("pick")
 
 
@@ -2731,7 +2732,7 @@ def q_greedy_coverage(spark, sf_dir):
             .limit(1)
             .select("doc_id", F.lit(k).cast("long").alias("pick"), "gain")
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = checkpoint_round(sel.unionByName(pick), replaces=sel)
     return sel.select(
         "pick", "doc_id", F.col("gain").alias("new_tokens")
     ).orderBy("pick")

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions.compat import exact_sum, sql_exact_sum
-from ..io import load_table, load_tables
+from ..io import load_table, load_tables, scratch_dir
+from ..session import checkpoint_round
 from .registry import query
 from .roundfive_queries import _COPURCHASE_EDGES, _copurchase_edges
 
@@ -34,19 +35,26 @@ _PR_DAMP_PPM = 850_000  # 0.85 in parts-per-million
 _PR_ROUNDS = 8
 
 
-def _sql_pagerank(rounds: int) -> str:
+def _sql_int_pagerank(seed: str, col: str, where: str = "") -> str:
+    """DuckDB chained-CTE twin of :func:`_int_pagerank`: restart mass
+    goes to the nodes where the SQL predicate ``seed`` holds (a format
+    string over ``{node}``); the output columns are ``{col}_scaled`` and
+    ``{col}``, and ``where`` filters the last round."""
     steps = [
         f"""
     r0 AS (
-      SELECT node, CAST({_PR_TOTAL} // (SELECT n FROM ns) AS BIGINT) AS v
+      SELECT node,
+             CAST(CASE WHEN {seed.format(node="node")}
+                  THEN (SELECT v FROM seedv) ELSE 0 END AS BIGINT) AS v
       FROM nodes
     )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _PR_ROUNDS + 1):
         steps.append(f"""
     r{i} AS (
       SELECT n.node,
-             CAST((SELECT b FROM basec)
+             CAST(CASE WHEN {seed.format(node="n.node")}
+                  THEN (SELECT b FROM seedv) ELSE 0 END
                   + COALESCE(SUM(((r.v * {_PR_DAMP_PPM}) // 1000000)
                                  // w.deg), 0) AS BIGINT) AS v
       FROM nodes n
@@ -58,57 +66,66 @@ def _sql_pagerank(rounds: int) -> str:
     WITH {_COPURCHASE_EDGES},
     edges AS (SELECT DISTINCT src, dst FROM sym),
     nodes AS (SELECT DISTINCT src AS node FROM edges),
-    ns AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
+    nseed AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
+      WHERE {seed.format(node="node")}
+    ),
+    seedv AS (
+      SELECT {_PR_TOTAL} // n AS v,
+             (({_PR_TOTAL} // n) * 150000) // 1000000 AS b
+      FROM nseed
+    ),
     outdeg AS (
       SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY 1
     ),
     ws AS (SELECT e.src, e.dst, d.deg FROM edges e JOIN outdeg d USING (src)),
-    basec AS (
-      SELECT CAST((({_PR_TOTAL} // (SELECT n FROM ns)) * 150000) // 1000000
-                  AS BIGINT) AS b
-    ),
     {",".join(steps)}
-    SELECT node, v AS pr_scaled,
-           ROUND(CAST(v AS DOUBLE) / (SELECT SUM(v) FROM r{rounds}), 6)
-             AS pr
-    FROM r{rounds}
+    SELECT node, v AS {col}_scaled,
+           ROUND(CAST(v AS DOUBLE) / (SELECT SUM(v) FROM r{_PR_ROUNDS}), 6)
+             AS {col}
+    FROM r{_PR_ROUNDS}{where}
     """
 
 
-@query("q_pagerank_exact", _sql_pagerank(_PR_ROUNDS))
-def q_pagerank_exact(spark, sf_dir):
-    """Hash-certified twin of the rows-only floating-point q_pagerank
-    (analytics_queries.py): PageRank over the co-purchase part graph by
-    EIGHT fixed-point power sweeps, every round certified against the
-    DuckDB chained-CTE twin (the q_markov_stationary proof pattern applied to
-    the damped web-graph recurrence): rank mass quantized to 1e8
-    BIGINTs, the damping factor to ppm, every sweep an integer
-    floor-divided gather — bit-identical in any engine and summation
-    order. The symmetric co-purchase graph has no dangling nodes, so
-    the teleport term is the constant (0.15 · total/N) per node.
-    Physical posture: the per-round job is one key-join of the rank
-    vector against the (src, dst, deg) edge list plus a sum — the
-    standard distributed PageRank shape; rounds checkpoint eagerly so
-    lineage stays flat (the q_markov/connected-components discipline)."""
-    from ..session import release_checkpoint
+def _int_pagerank(spark, sf_dir, is_seed):
+    """(node, v): the integer power iteration behind q_pagerank_exact and
+    q_ppr over the symmetric co-purchase graph. Rank mass is quantized
+    to 1e8 BIGINTs, the damping factor to ppm, and each of the
+    ``_PR_ROUNDS`` sweeps is a floor-divided gather, so every round is
+    bit-identical in any engine and summation order. The start vector
+    and the restart term (0.15 of the mass) go to the nodes where the
+    boolean column ``is_seed`` holds, split evenly; with every node a
+    seed this is plain PageRank. The graph has no dangling nodes, so
+    mass leaks only through floor division.
 
+    Physical shape: the (src, dst, deg) edge list and the node set are
+    eager checkpoints computed once (a lazy node distinct re-ran an
+    edge-grain shuffle inside every round's job; a
+    ``repartition("src").persist()`` layout measured 2.3× slower on
+    this loop, OPTIMIZATION_r14), and each round is one key-join of the
+    rank vector against the edge list plus a sum, checked in with
+    ``checkpoint_round`` so lineage stays flat."""
     canon = _copurchase_edges(spark, sf_dir).select("src", "dst")
-    # symmetrize: _copurchase_edges is canonical a<b; the random walk
-    # (and the oracle's sym CTE) runs over BOTH directions
+    # _copurchase_edges is canonical a<b; the walk runs over BOTH
+    # directions (the oracle's sym CTE)
     edges = canon.unionByName(
-        canon.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
+        canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     outdeg = edges.groupBy("src").agg(
         F.count("*").cast("long").alias("deg")
     )
     ws = edges.join(outdeg, "src").localCheckpoint(eager=True)
-    nodes = ws.select(F.col("src").alias("node")).distinct()
-    n_nodes = nodes.count()  # bounded: |sampled parts|
-    base = ((_PR_TOTAL // n_nodes) * 150_000) // 1_000_000
+    nodes = (
+        ws.select(F.col("src").alias("node"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n_seeds = nodes.filter(is_seed).count()  # bounded: |sampled parts|
+    seed_v = _PR_TOTAL // n_seeds
+    seed_base = (seed_v * 150_000) // 1_000_000
     v = nodes.select(
-        "node", F.lit(_PR_TOTAL // n_nodes).cast("long").alias("v")
+        "node",
+        F.when(is_seed, F.lit(seed_v)).otherwise(0).cast("long").alias("v"),
     ).localCheckpoint(eager=True)
     for _ in range(_PR_ROUNDS):
         contrib = (
@@ -122,18 +139,32 @@ def q_pagerank_exact(spark, sf_dir):
             .groupBy("node")
             .agg(F.sum("c").cast("long").alias("cs"))
         )
-        new_v = (
-            nodes.join(contrib, "node", "left")
-            .select(
+        v = checkpoint_round(
+            nodes.join(contrib, "node", "left").select(
                 "node",
-                (F.lit(base) + F.coalesce(F.col("cs"), F.lit(0)))
+                (
+                    F.when(is_seed, F.lit(seed_base)).otherwise(0)
+                    + F.coalesce(F.col("cs"), F.lit(0))
+                )
                 .cast("long")
                 .alias("v"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            replaces=v,
         )
-        release_checkpoint(v)
-        v = new_v
+    return v
+
+
+@query("q_pagerank_exact", _sql_int_pagerank("TRUE", "pr"))
+def q_pagerank_exact(spark, sf_dir):
+    """Hash-certified twin of the rows-only floating-point q_pagerank
+    (analytics_queries.py): PageRank over the co-purchase part graph by
+    EIGHT fixed-point power sweeps (:func:`_int_pagerank` with every
+    node a seed), every round certified against the DuckDB chained-CTE
+    twin (the q_markov_stationary proof pattern applied to the damped
+    web-graph recurrence). The symmetric co-purchase graph has no
+    dangling nodes, so the teleport term is the constant
+    (0.15 · total/N) per node."""
+    v = _int_pagerank(spark, sf_dir, F.lit(True))
     tot = v.agg(F.sum("v").alias("tv"))
     return v.join(F.broadcast(tot)).select(
         "node",
@@ -1338,10 +1369,7 @@ def q_format_federation(spark, sf_dir):
     the union must be exactly 3x the source per key. Explicit schemas
     keep every reader a zero-inference scan; unionByName guarantees
     column alignment across the format readers."""
-    import os
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), f"lbd_fed_{os.getuid()}")
+    base = scratch_dir("fed")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -144,6 +144,24 @@ Scopes nest. This is the package's only place that sets or unsets confs
 on a live session besides ``tune_session``; a writer-level setting (e.g.
 ``partitionOverwriteMode``) goes on the writer as an ``option`` instead.
 
+Frame lifetimes in loops (``checkpoint_round``): every iterative
+operator (PageRank, connected components, k-core, BFS, the fixed-sweep
+certificates) ends each round with one call that owns the round's frame.
+
+- It checks the frame in with ``localCheckpoint(eager=True)``, so plan
+  depth stays O(1) in rounds.
+- Named aggregate columns passed with it (a row count, a label sum) are
+  observed on that same job and returned, so a convergence test costs
+  no job of its own.
+- The frames it ``replaces`` have their blocks released once the new
+  checkpoint exists. Without the release, executor storage holds one
+  copy per round until a driver GC runs Spark's ContextCleaner.
+
+A loop that keeps its old rounds (BFS levels read by the final union, the
+previous k-means sweep) passes nothing to ``replaces`` for them. Lazy
+checkpoints (``localCheckpoint(eager=False)``) that a later job
+materializes are the caller's own.
+
 Session memo (``memo``): the one in-memory store for frames and fits
 that several queries share (co-purchase edges, graph layouts, k-means
 and IVF centroids, PQ codebooks, similarity chains).
@@ -175,7 +193,7 @@ import threading
 from contextlib import contextmanager
 
 from pyspark import SparkContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from . import jvm_archive
 
@@ -326,12 +344,13 @@ def release_checkpoint(df) -> None:
 
     ``DataFrame.unpersist()`` only consults the cache manager and is a
     no-op for checkpointed data; the blocks belong to the RDD inside the
-    plan's ``LogicalRDD`` node. Iterative operators (PageRank, connected
-    components) checkpoint every round — without an explicit release,
-    executor storage accumulates O(n_iter) copies of the frame for the
-    duration of the call. Reaches through the JVM plan (private API), so
+    plan's ``LogicalRDD`` node. Iterative loops release the round they
+    replace through ``checkpoint_round(..., replaces=...)``; call this
+    directly only for a frame no later round replaces (a loop's last
+    frame, a memo entry). Reaches through the JVM plan (private API), so
     failures are swallowed: worst case is the old behavior, blocks live
-    until the session GCs them.
+    until the session GCs them; a frame that is not a checkpoint (or
+    ``None``) is left alone.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -339,6 +358,31 @@ def release_checkpoint(df) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass
+
+
+def checkpoint_round(df: DataFrame, *metrics: Column, replaces=None):
+    """One round of an iterative loop (see "Frame lifetimes in loops" in
+    the module docstring): ``df`` checked in with an eager
+    ``localCheckpoint``.
+
+    ``metrics``: named aggregate columns, e.g.
+    ``F.count(F.lit(1)).alias("n")``, observed on the checkpoint's own
+    job. With them the call returns ``(frame, values)``, ``values`` a
+    dict by name; without them, the frame.
+
+    ``replaces``: a frame, or a list of frames, that the new one
+    replaces; each is released after the new checkpoint exists. ``None``
+    entries and frames that are not checkpoints are skipped.
+    """
+    if metrics:
+        obs = Observation()
+        out = df.observe(obs, *metrics).localCheckpoint(eager=True)
+        values = obs.get
+    else:
+        out = df.localCheckpoint(eager=True)
+    for old in replaces if isinstance(replaces, (list, tuple)) else [replaces]:
+        release_checkpoint(old)
+    return (out, values) if metrics else out
 
 
 # the session memo (see the module docstring): the application that owns

@@ -25,6 +25,7 @@ returns an empty string for such a PDF.
 from __future__ import annotations
 
 import io
+import os
 import re
 import zlib
 from collections.abc import Iterator
@@ -90,10 +91,43 @@ def with_html_text(df: DataFrame, html_col: str, out_col: str = "text") -> DataF
     return df.withColumn(out_col, _extract(F.col(html_col)))
 
 
+_GLOB = re.compile(r"[*?\[{]")
+
+
+def _binary_files(spark: SparkSession, path_glob: str) -> DataFrame:
+    """``binaryFile`` load of ``path_glob``. When only the last path
+    component holds a glob (``<dir>/*.pdf``) and ``<dir>`` is a local
+    directory without subdirectories, the directory is loaded with
+    ``pathGlobFilter`` instead: for a glob path Spark's FileStreamSink
+    metadata probe fails and logs a WARN with a ``FileNotFoundException``
+    trace per load, for a directory it does not. Both list the same
+    files. A subdirectory would change that: a directory load reads a
+    ``key=value`` one as a partition (``d/x=1/a.pdf``) and then drops
+    the files beside it."""
+    parent, _, name = path_glob.rpartition("/")
+    reader = spark.read.format("binaryFile")
+    if (
+        parent
+        and _GLOB.search(name)
+        and not _GLOB.search(parent)
+        and _is_flat_dir(parent)
+    ):
+        return reader.option("pathGlobFilter", name).load(parent)
+    return reader.load(path_glob)
+
+
+def _is_flat_dir(path: str) -> bool:
+    try:
+        with os.scandir(path) as entries:
+            return not any(e.is_dir() for e in entries)
+    except OSError:  # not a local directory
+        return False
+
+
 def read_html_docs(spark: SparkSession, path_glob: str) -> DataFrame:
     """binaryFile scan + extraction → (path, text); a file that is not
     valid UTF-8 raises an error naming it."""
-    raw = spark.read.format("binaryFile").load(path_glob)
+    raw = _binary_files(spark, path_glob)
     decoded = raw.select(
         F.col("path"),
         F.when(F.is_valid_utf8("content"), F.decode("content", "utf-8"))
@@ -208,7 +242,7 @@ def read_pdf_lines(spark: SparkSession, path_glob: str) -> DataFrame:
                 }
             )
 
-    raw = spark.read.format("binaryFile").load(path_glob).select("path", "content")
+    raw = _binary_files(spark, path_glob).select("path", "content")
     docs = raw.mapInPandas(extract, "path string, text string")
     return docs.select(
         "path", F.explode(F.split(F.col("text"), "\n")).alias("line")

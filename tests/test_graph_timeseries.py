@@ -24,6 +24,7 @@ from legislative_bills_database_spark.operators.timeseries import (
     ewma_last,
     gap_fill_daily,
 )
+from legislative_bills_database_spark.session import clear_memos
 
 
 def _ts(day, hour=0):
@@ -227,24 +228,121 @@ def test_triangle_orientation_bounds_hub_fanout(spark):
     assert max_deg <= 3  # leaves keep O(√m) fan-out
 
 
-def test_pagerank_releases_iteration_checkpoints(spark):
-    """Each iteration's eager checkpoint must free the previous one:
-    executor storage holds O(1) rank frames, not O(n_iter)."""
-    sc = spark.sparkContext
-
-    def n_stored():
-        return len(sc._jsc.sc().getRDDStorageInfo())
-
+def _pagerank(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")],
         "src string, dst string",
     )
-    before = n_stored()
     pagerank(edges, n_iter=8).collect()
-    after = n_stored()
-    # the final ranks checkpoint (+ at most one transient) may linger;
-    # 8 iterations would leak ≥8 frames without the release
-    assert after - before <= 2, (before, after)
+
+
+def _graph_op(name, **kw):
+    def run(spark):
+        from legislative_bills_database_spark.operators import graph
+
+        edges = spark.createDataFrame(
+            [(1, 2, 3), (2, 3, 1), (3, 1, 2), (3, 4, 5), (4, 5, 1), (5, 6, 2)],
+            "src long, dst long, w long",
+        )
+        args = [edges]
+        if name == "shortest_paths":
+            args.append(spark.createDataFrame([(1,)], "node long"))
+        getattr(graph, name)(*args, **kw).collect()
+
+    return run
+
+
+def _connected_components(spark):
+    from legislative_bills_database_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (7, 8)], "id_a long, id_b long"
+    )
+    ids = pairs.select(F.col("id_a").alias("node")).union(pairs.select("id_b"))
+    connected_components(
+        pairs, ids.distinct(), id_col="node", small_graph_threshold=0
+    ).collect()
+
+
+def _query(name):
+    """Run the declared query and check it against its DuckDB oracle:
+    the default lane's parity pin for loops whose full-fixture parity
+    check runs only in the slow lane."""
+
+    def run(spark):
+        from legislative_bills_database_spark.plans import ORACLE, QUERIES
+        from tests.conftest import SF_DIR
+        from tests.oracle_util import compare
+
+        problems = compare(QUERIES[name](spark, SF_DIR), ORACLE[name], SF_DIR)
+        assert not problems, problems
+
+    return run
+
+
+def _kmeans_sweeps(spark):
+    from legislative_bills_database_spark.plans.clustering_queries import (
+        _km_sweeps,
+    )
+    from tests.conftest import SF_DIR
+
+    _km_sweeps(spark, SF_DIR)
+
+
+# (run, kept): kept is the number of checkpoints the result still reads
+# by design — the last round plus the loop's fixed inputs and any
+# session-memo frame the run builds
+_LOOPS = {
+    "pagerank": (_pagerank, 1),
+    "label_propagation": (_graph_op("label_propagation", n_iter=8), 1),
+    "k_core": (_graph_op("k_core", k=2), 1),
+    "shortest_paths": (_graph_op("shortest_paths", rounds=8), 1),
+    "connected_components": (_connected_components, 1),
+    # transition matrix + state vector
+    "q_markov_stationary": (_query("q_markov_stationary"), 2),
+    # duel matrix, win totals, strengths
+    "q_bradley_terry": (_query("q_bradley_terry"), 3),
+    # candidate pool, pairwise similarities, selection
+    "q_mmr_select": (_query("q_mmr_select"), 3),
+    # (doc, bigram) frame, selection
+    "q_greedy_coverage": (_query("q_greedy_coverage"), 2),
+    # exploded vectors and the last two sweeps (both collected)
+    "_km_sweeps": (_kmeans_sweeps, 3),
+    # co-purchase memo, edge list, node set, rank vector (q_ppr's loop)
+    "q_pagerank_exact": (_query("q_pagerank_exact"), 4),
+    # purchase-edge memo, last authorities, last hubs
+    "q_hits_scores": (_query("q_hits_scores"), 3),
+}
+
+
+@pytest.mark.parametrize("loop", list(_LOOPS))
+def test_pagerank_releases_iteration_checkpoints(spark, monkeypatch, loop):
+    """Each round's checkpoint frees the round it replaces: of all the
+    checkpoints a run makes, only those its result reads still hold
+    blocks — O(1) frames, not O(rounds). The run's frames are kept
+    referenced until the count, so Spark's ContextCleaner cannot free
+    a leaked round behind the test's back."""
+    made = []
+    frame_class = type(spark.range(1))  # the session's DataFrame class
+    check_in = frame_class.localCheckpoint
+
+    def recorded(self, *args, **kwargs):
+        made.append(check_in(self, *args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(frame_class, "localCheckpoint", recorded)
+    clear_memos()  # memo frames a run needs are built, and counted, inside it
+    run, kept = _LOOPS[loop]
+    run(spark)
+    stored = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    held = [
+        df for df in made
+        if df._jdf.queryExecution().analyzed().rdd().id() in stored
+    ]
+    assert len(made) > kept, len(made)  # the loop ran its rounds
+    assert len(held) <= kept, (len(held), len(made))
 
 
 def test_ewma_chunked_equals_sequential_multikey(spark):

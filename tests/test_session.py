@@ -5,10 +5,12 @@ codegen cache size; its Python UDFs run in
 one pool forked from the package's worker daemon, which re-reads a zip
 archive's directory only when the archive changed. The session memo
 returns the stored object on a hit, rebuilds (and releases) an entry
-whose input files changed, and belongs to one application."""
+whose input files changed, and belongs to one application. Loops leave
+their per-round checkpoints to ``checkpoint_round``."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import shutil
@@ -377,3 +379,37 @@ def test_scoped_conf_nests(spark):
         assert spark.conf.get(UNSET_KEY) == "1000"
         assert spark.conf.get(SET_KEY) == "3"
     assert spark.conf.getAll == before
+
+
+def _round_step(call: ast.Call) -> str | None:
+    """The per-round step ``call`` makes itself, if any: an eager
+    checkpoint, an observation or a checkpoint release."""
+    f = call.func
+    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    if name in ("Observation", "release_checkpoint"):
+        return name
+    if name == "localCheckpoint":
+        eager = [k.value for k in call.keywords if k.arg == "eager"]
+        eager += call.args[:1]
+        if not eager or (isinstance(eager[0], ast.Constant) and eager[0].value is True):
+            return "localCheckpoint(eager=True)"
+    return None
+
+
+def test_loops_leave_round_checkpoints_to_checkpoint_round():
+    """No ``for``/``while`` body in the package checks a frame in
+    eagerly, observes a metric or releases a checkpoint itself: loops
+    call ``session.checkpoint_round``, the one owner of round lifetimes
+    (``session.py`` is that owner and is not scanned)."""
+    package = Path(session.__file__).parent
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        if path.name == "session.py":
+            continue
+        for loop in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for node in ast.walk(ast.Module(body=loop.body + loop.orelse, type_ignores=[])):
+                if isinstance(node, ast.Call) and (step := _round_step(node)):
+                    found.append(f"{path.relative_to(package)}:{node.lineno} {step}")
+    assert not found, found

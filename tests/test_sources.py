@@ -1,5 +1,6 @@
 """Ingestion-layer tests: REST client (fake transport, zero network),
-PDF/HTML extraction, CSV sink naming, staging cache + manifest.
+PDF/HTML extraction, CSV sink naming, staging cache + manifest, and the
+query scratch directories.
 """
 
 from __future__ import annotations
@@ -8,6 +9,9 @@ import base64
 import glob
 import io
 import json
+import os
+import subprocess
+import sys
 import time
 import zipfile
 from pathlib import Path
@@ -178,6 +182,17 @@ def test_read_html_docs(spark, tmp_path):
     assert len(out) == 1 and "Budget & Housing" in out[0]["text"]
 
 
+def test_read_html_docs_keeps_to_the_globbed_directory(spark, tmp_path):
+    """``<dir>/*.html`` reads the files in ``<dir>`` only, also when a
+    ``key=value`` subdirectory (which a directory load would take for a
+    partition) holds matching files."""
+    (tmp_path / "2021_AB128.html").write_text(HTML)
+    (tmp_path / "year=2022").mkdir()
+    (tmp_path / "year=2022" / "2022_AB1.html").write_text(HTML)
+    out = read_html_docs(spark, str(tmp_path / "*.html")).collect()
+    assert [Path(r["path"]).name for r in out] == ["2021_AB128.html"]
+
+
 from legislative_bills_database_spark.sources.extract import make_simple_pdf as _make_pdf
 
 
@@ -273,3 +288,38 @@ def test_memo_parquet_corrupt_staging_raises(spark, tmp_path):
         memo_parquet(spark, p, compute).count()
     assert "PATH_NOT_FOUND" not in str(exc.value)
     assert not calls, "corrupt staging silently recomputed"
+
+
+# a fresh interpreter that runs the two text-source queries twice and
+# exits; argv[1] is the repository root, argv[2] the sf dir
+_SCRATCH_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from legislative_bills_database_spark.plans.reference_queries import (
+    q_html_text_source, q_pdf_text_source)
+from legislative_bills_database_spark.session import get_spark
+spark = get_spark(app_name="scratch-dirs", cpus=1)
+try:
+    for _ in range(2):
+        print(q_pdf_text_source(spark, sys.argv[2]).count(),
+              q_html_text_source(spark, sys.argv[2]).count())
+finally:
+    spark.stop()
+"""
+
+
+def test_query_scratch_dirs_are_removed_at_exit(tmp_path):
+    """Queries that write and read back files get their directories from
+    ``io.scratch_dir``: while the process runs they live under one
+    per-process ``lbd_*`` root in TMPDIR, and none is left once it exits."""
+    from conftest import REPO, SF_DIR
+
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    env["PYSPARK_SUBMIT_ARGS"] = f"--conf spark.local.dir={tmp_path} pyspark-shell"
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD, str(REPO), SF_DIR],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["3", "1"] * 2
+    assert sorted(p.name for p in tmp_path.glob("lbd_*")) == []

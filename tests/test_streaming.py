@@ -5,6 +5,8 @@ data via the file source with Trigger.AvailableNow.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +18,7 @@ from legislative_bills_database_spark.streaming import (
     stream_events_from_files,
     tumbling_counts,
 )
+from legislative_bills_database_spark.streaming.census import StreamCensus, drain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,17 +34,13 @@ def events_json_dir(spark, tmp_path_factory) -> str:
     return out
 
 
-def _run_available_now(stream_df, name: str, output_mode: str):
-    spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name)
+@contextmanager
+def _available_now(stream_df, name: str, output_mode: str):
+    """Drain ``stream_df`` under the session's own confs and yield its
+    memory table; the stream, the table and the checkpoints go away
+    when the block ends."""
+    with StreamCensus(stream_df.sparkSession, name) as census:
+        yield census.run(stream_df, output_mode, confs={})[0]
 
 
 def _canon(df, cols):
@@ -50,9 +49,6 @@ def _canon(df, cols):
 
 def test_tumbling_window_batch_stream_agreement(spark, events_json_dir):
     stream = stream_events_from_files(spark, events_json_dir)
-    got = _run_available_now(
-        tumbling_counts(stream), "t_tumbling", "complete"
-    )
     batch = load_table(spark, SF_DIR, "events")
     expected = (
         batch.groupBy(F.window("ts", "1 hour"), "event_type")
@@ -70,7 +66,8 @@ def test_tumbling_window_batch_stream_agreement(spark, events_json_dir):
         )
     )
     cols = ["window_start", "event_type", "n", "sum_value"]
-    assert _canon(got, cols) == _canon(expected, cols)
+    with _available_now(tumbling_counts(stream), "t_tumbling", "complete") as got:
+        assert _canon(got, cols) == _canon(expected, cols)
 
 
 def test_streaming_dedup_drops_duplicates(spark, tmp_path):
@@ -79,11 +76,9 @@ def test_streaming_dedup_drops_duplicates(spark, tmp_path):
     events = load_table(spark, SF_DIR, "events").limit(50)
     events.unionByName(events).repartition(1).write.json(src)  # every id twice
     stream = stream_events_from_files(spark, src)
-    got = _run_available_now(
-        dedup_within_watermark(stream), "t_dedup", "append"
-    )
-    assert got.count() == 50
-    assert got.select("event_id").distinct().count() == 50
+    with _available_now(dedup_within_watermark(stream), "t_dedup", "append") as got:
+        assert got.count() == 50
+        assert got.select("event_id").distinct().count() == 50
 
 
 def test_stateful_running_totals_match_batch(spark, events_json_dir):
@@ -92,22 +87,20 @@ def test_stateful_running_totals_match_batch(spark, events_json_dir):
     from legislative_bills_database_spark.streaming import running_user_totals
 
     stream = stream_events_from_files(spark, events_json_dir)
-    got = _run_available_now(
-        running_user_totals(stream), "t_running", "update"
-    )
-    # update mode emits one row per user per micro-batch — keep the last
-    final = (
-        got.withColumn("__idx", F.monotonically_increasing_id())
-        .groupBy("user_id")
-        .agg(F.max_by("n_events", "__idx").alias("n_events"),
-             F.max_by("total_value", "__idx").alias("total_value"))
-    )
     batch = load_table(spark, SF_DIR, "events").groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         F.sum("value").alias("total_value"),
     )
-    g = {r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-         for r in final.collect()}
+    with _available_now(running_user_totals(stream), "t_running", "update") as got:
+        # update mode emits one row per user per micro-batch — keep the last
+        final = (
+            got.withColumn("__idx", F.monotonically_increasing_id())
+            .groupBy("user_id")
+            .agg(F.max_by("n_events", "__idx").alias("n_events"),
+                 F.max_by("total_value", "__idx").alias("total_value"))
+        )
+        g = {r["user_id"]: (r["n_events"], round(r["total_value"], 6))
+             for r in final.collect()}
     b = {r["user_id"]: (r["n_events"], round(r["total_value"], 6))
          for r in batch.collect()}
     assert set(g) == set(b)
@@ -120,17 +113,14 @@ def test_session_window_agrees_with_batch_sessionize(spark, events_json_dir):
     """session_window session count per user == the batch lag/cumsum
     sessionizer's (same 30-minute gap)."""
     stream = stream_events_from_files(spark, events_json_dir)
-    got = (
-        _run_available_now(session_counts(stream), "t_sessions", "complete")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_sessions"))
-    )
     batch = sessionize(load_table(spark, SF_DIR, "events"), "user_id", "ts", 30)
     expected = batch.groupBy("user_id").agg(
         F.max("session_id").alias("n_sessions")
     )
     cols = ["user_id", "n_sessions"]
-    assert _canon(got, cols) == _canon(expected, cols)
+    with _available_now(session_counts(stream), "t_sessions", "complete") as sessions:
+        got = sessions.groupBy("user_id").agg(F.count("*").alias("n_sessions"))
+        assert _canon(got, cols) == _canon(expected, cols)
 
 
 def test_stream_stream_join_matches_batch_range_join(spark, events_json_dir):
@@ -151,7 +141,6 @@ def test_stream_stream_join_matches_batch_range_join(spark, events_json_dir):
         clicks, purchases, "user_id", left_ts="ts", right_ts="buy_ts",
         within="2 hours", watermark="4 hours",
     ).select(F.col("l.click_id"), F.col("r.buy_id"))
-    got = _run_available_now(joined, "t_corr", "append")
 
     batch = load_table(spark, SF_DIR, "events")
     b_clicks = batch.filter(F.col("event_type") == "click").select(
@@ -168,10 +157,11 @@ def test_stream_stream_join_matches_batch_range_join(spark, events_json_dir):
         & (F.col("buy_ts") >= F.col("ts"))
         & (F.col("buy_ts") <= F.col("ts") + F.expr("INTERVAL 2 hours")),
     ).select("click_id", "buy_id")
-    assert len(got.collect()) > 0  # the fixture must actually join rows
-    assert _canon(got, ["click_id", "buy_id"]) == _canon(
-        expected, ["click_id", "buy_id"]
-    )
+    with _available_now(joined, "t_corr", "append") as got:
+        assert len(got.collect()) > 0  # the fixture must actually join rows
+        assert _canon(got, ["click_id", "buy_id"]) == _canon(
+            expected, ["click_id", "buy_id"]
+        )
 
 
 def test_foreachbatch_sink_exactly_once_and_idempotent(
@@ -193,7 +183,7 @@ def test_foreachbatch_sink_exactly_once_and_idempotent(
         base,
         str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    drain(q)
 
     out = spark.read.parquet(base)
     batch_ids = sorted(
@@ -292,31 +282,22 @@ def test_session_watermark_evicts_old_state(spark, tmp_path):
         time.sleep(0.05)
         lo = hi
     assert len(glob.glob(jd + "/part-*")) == 4
-    stream = (
-        spark.readStream.format("json")
-        .schema(
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .load(jd)
-    )
-    q = (
-        session_counts(stream, watermark="2 hours")
-        .writeStream.format("memory")
-        .queryName("t_evict")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert len(q.recentProgress) >= 2, "multi-batch ingestion required"
-    n_stream = spark.table("t_evict").count()
     n_batch = (
         events.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .count()
         .count()
     )
+    with StreamCensus(spark, "t_evict") as census:
+        stream = census.stream(
+            jd,
+            "event_id long, ts timestamp, user_id long,"
+            " event_type string, value double",
+        )
+        got, progress = census.run(
+            session_counts(stream, watermark="2 hours"), "append", confs={}
+        )
+        assert len(progress) >= 2, "multi-batch ingestion required"
+        n_stream = got.count()
     # early sessions finalized+emitted (state dropped), tail withheld
     assert 0 < n_stream < n_batch
 

@@ -8,6 +8,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from legislative_bills_database_spark.operators.scd import scd2_merge
+from legislative_bills_database_spark.streaming.census import drain
 from legislative_bills_database_spark.streaming.scd import (
     scd2_batch_applier,
     scd2_stream,
@@ -56,7 +57,7 @@ def test_stream_matches_batch(spark, tmp_path):
     q = scd2_stream(
         stream, spark, base, str(tmp_path / "ckpt"), "k", ["attr"]
     )
-    q.awaitTermination(120)
+    drain(q)
 
     empty = spark.createDataFrame(
         [], "k long, attr string, valid_from timestamp, valid_to timestamp, "
