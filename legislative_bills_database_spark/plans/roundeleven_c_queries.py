@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..session import checkpoint_round
+from ..session import checkpoint_round, release_checkpoint
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1303,6 +1303,7 @@ def q_bradley_terry(spark, sf_dir):
             ),
             replaces=pi,
         )
+    release_checkpoint(m)
     return wtot.join(pi, "brand").select(
         "brand", "wins", "n_comp", F.col("piq").alias("strength_q")
     )

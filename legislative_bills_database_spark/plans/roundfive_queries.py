@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import exact_sum, sql_exact_sum
 from ..io import load_table, load_tables, scratch_dir
-from ..session import checkpoint_round, memo, scoped_conf
+from ..session import checkpoint_round, memo, release_checkpoint, scoped_conf
 from .registry import query
 
 
@@ -1457,6 +1457,7 @@ def q_markov_stationary(spark, sf_dir):
             .agg(F.sum("vv").cast("long").alias("v")),
             replaces=v,
         )
+    release_checkpoint(pint)
     tot_v = v.agg(F.sum("v").alias("tv"))
     return v.join(F.broadcast(tot_v)).select(
         "state",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions.compat import exact_sum, sql_exact_sum
 from ..io import load_table, load_tables, scratch_dir
-from ..session import checkpoint_round
+from ..session import checkpoint_round, release_checkpoint
 from .registry import query
 from .roundfive_queries import _COPURCHASE_EDGES, _copurchase_edges
 
@@ -99,12 +99,12 @@ def _int_pagerank(spark, sf_dir, is_seed):
     mass leaks only through floor division.
 
     Physical shape: the (src, dst, deg) edge list and the node set are
-    eager checkpoints computed once (a lazy node distinct re-ran an
-    edge-grain shuffle inside every round's job; a
-    ``repartition("src").persist()`` layout measured 2.3× slower on
-    this loop, OPTIMIZATION_r14), and each round is one key-join of the
-    rank vector against the edge list plus a sum, checked in with
-    ``checkpoint_round`` so lineage stays flat."""
+    eager checkpoints computed once and released after the last round
+    (a lazy node distinct re-ran an edge-grain shuffle inside every
+    round's job; a ``repartition("src").persist()`` layout measured
+    2.3× slower on this loop, OPTIMIZATION_r14), and each round is one
+    key-join of the rank vector against the edge list plus a sum,
+    checked in with ``checkpoint_round`` so lineage stays flat."""
     canon = _copurchase_edges(spark, sf_dir).select("src", "dst")
     # _copurchase_edges is canonical a<b; the walk runs over BOTH
     # directions (the oracle's sym CTE)
@@ -151,6 +151,8 @@ def _int_pagerank(spark, sf_dir, is_seed):
             ),
             replaces=v,
         )
+    release_checkpoint(ws)
+    release_checkpoint(nodes)
     return v
 
 

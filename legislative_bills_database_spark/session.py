@@ -102,6 +102,14 @@ Defaults chosen for correctness-vs-oracle and 100 TB posture:
   ``COLLECTOR`` and keeps the rest.
   Like the JIT profile it applies only when this factory launches the
   JVM: a session built elsewhere keeps its own collector.
+- No DataFrame call-site recording
+  (``spark.python.sql.dataFrameDebugging.enabled`` off). With it on,
+  every ``functions.*`` call makes about five extra py4j round trips to
+  record the Python line that called it. PySpark reads the flag once
+  per process, at its first use, so it goes in the builder: a later
+  ``spark.conf.set`` comes too late. The trade: an error no longer
+  carries the ``== DataFrame ==`` fragment that names the Python line
+  which built the failing column.
 - The driver JVM's flags above are one string, ``DRIVER_JAVA_OPTIONS``:
   the launch and the class-data archive's training pass use it, and the
   archive key hashes it, so a changed flag gets an archive of its own.
@@ -189,6 +197,7 @@ from __future__ import annotations
 
 import os
 import re
+import stat
 import threading
 from contextlib import contextmanager
 
@@ -269,6 +278,7 @@ def session_builder(app_name: str, cpus, shuffle_partitions: int | None, java_op
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "legislative_bills_database_spark.worker_daemon")
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
 
 
@@ -392,19 +402,26 @@ _memos: dict[tuple, tuple] = {}
 _memo_lock = threading.Lock()
 
 
-def _fingerprint(sf_dir) -> tuple:
-    """Sorted (path, st_size, st_mtime_ns) of every file under sf_dir;
-    empty when the driver cannot list it."""
+def fingerprint(path) -> tuple:
+    """Sorted (path, st_size, st_mtime_ns) of ``path`` when it is a file,
+    else of every file under it; empty when the driver cannot list it."""
+    path = str(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return ()
+    if stat.S_ISREG(st.st_mode):
+        return ((path, st.st_size, st.st_mtime_ns),)
     out = []
-    for root, dirs, files in os.walk(str(sf_dir)):
+    for root, dirs, files in os.walk(path):
         dirs.sort()
         for name in sorted(files):
-            path = os.path.join(root, name)
+            file = os.path.join(root, name)
             try:
-                st = os.stat(path)
+                st = os.stat(file)
             except OSError:
                 continue
-            out.append((path, st.st_size, st.st_mtime_ns))
+            out.append((file, st.st_size, st.st_mtime_ns))
     return tuple(out)
 
 
@@ -420,7 +437,7 @@ def memo(spark, sf_dir, key, build):
     global _memo_app
     app = spark.sparkContext.applicationId
     slot = (str(sf_dir), key)
-    fp = _fingerprint(sf_dir)
+    fp = fingerprint(sf_dir)
     # the lock guards the store, not build(): builds nest memo calls
     with _memo_lock:
         if app != _memo_app:

@@ -16,6 +16,8 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import read_parquet
+
 
 def memo_parquet(
     spark: SparkSession,
@@ -25,10 +27,15 @@ def memo_parquet(
 ) -> DataFrame:
     """Load the staging table at ``path`` if present, else compute, persist
     to parquet, and read back (so downstream always scans columnar storage
-    with footer stats, never re-runs the expensive lineage)."""
+    with footer stats, never re-runs the expensive lineage).
+
+    Both reads go through ``io.read_parquet``. The read-back takes the
+    written frame's schema, the one inference would find, and leaves it
+    in the schema cache: neither the read-back nor a later open runs an
+    inference job."""
     if not force:
         try:
-            return spark.read.parquet(path)
+            return read_parquet(spark, path)
         except AnalysisException as e:
             # ONLY path-not-found means "not staged yet". A corrupt or
             # partially-written staging table must surface, not silently
@@ -36,8 +43,9 @@ def memo_parquet(
             # transient storage failures).
             if "PATH_NOT_FOUND" not in (e.getCondition() or str(e)):
                 raise
-    compute().write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    df = compute()
+    df.write.mode("overwrite").parquet(path)
+    return read_parquet(spark, path, written=df.schema)
 
 
 def stage_bucketed(

@@ -25,6 +25,9 @@ table thereafter.
 
 from __future__ import annotations
 
+import glob
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -112,6 +115,20 @@ def session_dir(data_root: str, title: str, kind: str) -> str:
     return f"{data_root}/{title}/CA/{title.replace(' ', '_')}/{kind}"
 
 
+def _session_roots(data_root: str, kind: str) -> list[str]:
+    """The ``kind`` directories of every session under ``data_root``:
+    listed on the driver when ``data_root`` is a plain local path, else
+    (a URI) the glob ``<data_root>/*/CA/*/<kind>`` for Spark to expand.
+    A local root without any raises ``FileNotFoundError``."""
+    pattern = f"{data_root}/*/CA/*/{kind}"
+    if urlparse(data_root).scheme:
+        return [pattern]
+    roots = sorted(glob.glob(pattern))
+    if not roots:
+        raise FileNotFoundError(f"no session directories match {pattern}")
+    return roots
+
+
 def _read_json(
     spark: SparkSession,
     schema: StructType,
@@ -136,10 +153,17 @@ def _read_json(
     that names it; Spark's default would read it as a row of NULLs that
     drops out of every count and report without a trace.
 
+    Every session of a local ``data_root`` is found on the driver
+    (:func:`_session_roots`); the read gets the session directories, not
+    a glob. Spark probes a lone root path for a streaming sink's
+    ``_spark_metadata`` before it expands globs, and on a glob that
+    probe logs a ``FileStreamSink`` warning with a
+    ``FileNotFoundException`` trace.
+
     input_file_name() yields URL-encoded URIs ('%20' for the spaces in
     session titles) — decode before extracting."""
     if sessions is None:
-        roots = [f"{data_root}/*/CA/*/{kind}"]
+        roots = _session_roots(data_root, kind)
     else:
         roots = [session_dir(data_root, s, kind) for s in sessions]
     df = (

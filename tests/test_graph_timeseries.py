@@ -300,18 +300,18 @@ _LOOPS = {
     "k_core": (_graph_op("k_core", k=2), 1),
     "shortest_paths": (_graph_op("shortest_paths", rounds=8), 1),
     "connected_components": (_connected_components, 1),
-    # transition matrix + state vector
-    "q_markov_stationary": (_query("q_markov_stationary"), 2),
-    # duel matrix, win totals, strengths
-    "q_bradley_terry": (_query("q_bradley_terry"), 3),
+    # state vector
+    "q_markov_stationary": (_query("q_markov_stationary"), 1),
+    # win totals, strengths
+    "q_bradley_terry": (_query("q_bradley_terry"), 2),
     # candidate pool, pairwise similarities, selection
     "q_mmr_select": (_query("q_mmr_select"), 3),
     # (doc, bigram) frame, selection
     "q_greedy_coverage": (_query("q_greedy_coverage"), 2),
     # exploded vectors and the last two sweeps (both collected)
     "_km_sweeps": (_kmeans_sweeps, 3),
-    # co-purchase memo, edge list, node set, rank vector (q_ppr's loop)
-    "q_pagerank_exact": (_query("q_pagerank_exact"), 4),
+    # co-purchase memo, rank vector (q_ppr's loop)
+    "q_pagerank_exact": (_query("q_pagerank_exact"), 2),
     # purchase-edge memo, last authorities, last hubs
     "q_hits_scores": (_query("q_hits_scores"), 3),
 }

@@ -146,6 +146,69 @@ def test_read_bills_catalog_columns(spark, data_root):
     ]
 
 
+def test_read_roots_are_the_session_directories(data_root, tmp_path):
+    """Every session of a local tree is listed on the driver, so Spark
+    gets no glob; a URI keeps the glob, and a local tree without
+    sessions fails loudly."""
+    from legislative_bills_database_spark.sources.documents import _session_roots
+
+    assert _session_roots(data_root, "bill") == [session_dir(data_root, s, "bill") for s in SESSIONS]
+    assert _session_roots("s3a://b/data", "people") == ["s3a://b/data/*/CA/*/people"]
+    with pytest.raises(FileNotFoundError, match="no session directories"):
+        _session_roots(str(tmp_path), "bill")
+
+
+_STAGE_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from legislative_bills_database_spark.session import get_spark
+from legislative_bills_database_spark.sources.documents import stage_document_model
+spark = get_spark(cpus=2)
+bills, people = stage_document_model(spark, sys.argv[2], sys.argv[3], force=True)
+print(bills.count(), people.count())
+"""
+
+
+def test_staging_every_session_logs_no_stream_sink_probe(data_root, tmp_path):
+    """Staging the whole tree hands Spark the session directories: with
+    a glob, Spark's probe for a streaming sink's metadata logged one
+    ``WARN FileStreamSink`` with a ``FileNotFoundException`` per read."""
+    import os
+    import subprocess
+    import sys
+
+    from conftest import REPO
+
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _STAGE_CHILD, str(REPO), data_root, str(tmp_path / "staging")],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["7", "5"]
+    assert "FileStreamSink" not in out.stderr
+
+
+def test_staged_tables_seed_the_inferred_schema(spark, data_root, tmp_path):
+    """The staging read-back takes the written frame's schema, runs no
+    inference job and leaves exactly the schema inference finds."""
+    from legislative_bills_database_spark import io
+    from legislative_bills_database_spark.sources.documents import stage_document_model
+
+    sc = spark.sparkContext
+    staged = stage_document_model(spark, data_root, str(tmp_path / "staging"))
+    for name, df in zip(("bills", "people"), staged):
+        path = str(tmp_path / "staging" / name)
+        inferred = spark.read.parquet(path).schema
+        assert io._schemas[path][1] == df.schema == inferred
+        sc.setJobGroup(f"reopen-{name}", "staged table re-open")
+        try:
+            io.read_parquet(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"reopen-{name}") == []
+
+
 def test_read_bills_lists_session_directory_on_driver(spark, tmp_path):
     """40 bill files in one session: past Spark's 32-path parallel
     listing threshold if the read were rooted at the files, which would
